@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
+  * SPARK_GRAFT_SF_DIR and prints per-query seconds as short JSON lines
+  * followed by summary lines (the full output shape is below).
   *
   * Each query is materialized through the `noop` sink — a plain
   * `count()` would let Catalyst prune the projection work (clean_columns

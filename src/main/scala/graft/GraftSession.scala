@@ -46,11 +46,14 @@ object GraftSession {
     // pass (guide §6/§7.3 — commit protocol cost scales with file
     // count). The lifecycle gates (snapshot/delta/iceberg fixtures)
     // issue dozens of small writes per query, each paying v1's extra
-    // sequential driver-side rename round. Atomicity is NOT provided
-    // by the job commit in this engine — every table layer publishes
-    // via its own manifest/log pointer flip — so v2's weaker failure
-    // story costs nothing here, the same reasoning cloud object-store
-    // committers use.
+    // sequential driver-side rename round. The lake table layers
+    // (snapshot / Delta / Iceberg / Hudi) do not rely on the job commit
+    // for atomicity — each publishes via its own manifest/log pointer
+    // flip — so v2's weaker failure story costs them nothing, the same
+    // reasoning cloud object-store committers use. Plain path
+    // overwrites are NOT covered: `PipelineApi.materialize` and
+    // `TableIO.replaceParquet` write straight into the destination, so
+    // a failed job there can leave it partial (ROADMAP direction 3).
     .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
 
   /** The harness shape both driver entrypoints (Bench, Verify) share:

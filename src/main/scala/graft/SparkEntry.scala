@@ -7,15 +7,13 @@ import graft.queries.{AnalyticsQueries, CurationQueries, ExtendedQueries, Govern
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Queries are assembled from three registries:
-  *  - [[graft.queries.SurveyQueries]] — the reference's capability surface
-  *    (clean_columns / clean_rows / merge_table_versions / sensitive_tier
-  *    + the profiling aggregates) on survey-shaped derived inputs;
-  *  - [[graft.queries.RelationalQueries]] — engine-grade relational
-  *    operators (agg/join/window/top-k/set-ops/rollup/time-bucketing);
-  *  - [[graft.queries.PipelineQueries]] — training-data pipeline operators
-  *    (dedup exact/minhash/simhash/jaccard/embedding, similarity search,
-  *    text analysis, multimodal plumbing).
+  * Queries are assembled from twelve registries, in `allQueries` order:
+  * [[graft.queries.SurveyQueries]] (the reference's capability surface —
+  * clean_columns / clean_rows / merge_table_versions / sensitive_tier and
+  * the profiling aggregates — on survey-shaped inputs), Relational,
+  * Pipeline (dedup, similarity search, text, multimodal), Extended,
+  * Curation (incl. lakehouse maintenance), Analytics, MlPrep, Streaming,
+  * Governance, Unicode, Temporal and Spatial (`graft.queries.*Queries`).
   */
 object SparkEntry {
 

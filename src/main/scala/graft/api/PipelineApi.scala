@@ -3,13 +3,15 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.audit.Audit
+import graft.sources.ParquetScan
 import graft.transform.{CleanColumns, CleanRows, MergeTableVersions, SensitiveTier}
 
 /** Thin service facade mirroring the reference's five REST endpoints
   * (`/root/reference/core/endpoints.py`): heartbeat, clean_columns,
   * clean_rows, merge_table_versions, create_sensitive_tier. The reference
   * binds them to Flask + BigQuery CTAS; here each is
-  * read-parquet → transform → audit plan → overwrite-parquet, returning
+  * read-parquet (the shared [[ParquetScan]] path: no schema-inference
+  * job) → transform → audit plan → overwrite-parquet, returning
   * the same status JSON shape. A `tableId` (e.g.
   * "FlatConnect.module1_v2_JP") selects per-table rename/transform config
   * exactly as the reference's fully-qualified table name does. */
@@ -45,7 +47,7 @@ object PipelineApi {
     * plan before writing. */
   def cleanColumns(spark: SparkSession, source: String, dest: String,
       tableId: String = "", auditDir: String = "/tmp/graft-audit"): Result = {
-    val df = spark.read.parquet(source)
+    val df = ParquetScan.readPath(spark, source)
     Audit.saveText(
       CleanColumns.toSql(df.schema.fieldNames.toSeq, tableId, source, dest),
       s"$auditDir/${dest.replaceAll("[^A-Za-z0-9._-]", "_")}.sql")
@@ -55,7 +57,7 @@ object PipelineApi {
   /** Ref: `core/endpoints.py:37-52` → process_rows. */
   def cleanRows(spark: SparkSession, source: String, dest: String,
       useReference: Boolean = true, auditDir: String = "/tmp/graft-audit"): Result = {
-    val df = spark.read.parquet(source)
+    val df = ParquetScan.readPath(spark, source)
     val cls = CleanRows.classify(df, useReference)
     Audit.saveText(CleanRows.toSql(cls, source, dest),
       s"$auditDir/${dest.replaceAll("[^A-Za-z0-9._-]", "_")}.sql")
@@ -68,11 +70,11 @@ object PipelineApi {
       auditDir: String = "/tmp/graft-audit"): Result = {
     require(sources.size >= 2,
       "A destination table and at least two source tables must be provided.")
-    materialize(MergeTableVersions(sources.map(spark.read.parquet(_))), dest, auditDir)
+    materialize(MergeTableVersions(sources.map(ParquetScan.readPath(spark, _))), dest, auditDir)
   }
 
   /** Ref: `core/endpoints.py:72-87` → create_sensitive_tier. */
   def createSensitiveTier(spark: SparkSession, source: String, dest: String,
       auditDir: String = "/tmp/graft-audit"): Result =
-    materialize(SensitiveTier(spark.read.parquet(source)), dest, auditDir)
+    materialize(SensitiveTier(ParquetScan.readPath(spark, source)), dest, auditDir)
 }

@@ -69,6 +69,8 @@ object Materialize {
     val sc = spark.sparkContext
     val mode = spark.conf.get("spark.graft.loop.materialize",
       if (sc.isLocal) "local" else "reliable")
+    require(mode == "local" || mode == "reliable",
+      s"spark.graft.loop.materialize must be 'local' or 'reliable', got '$mode'")
     if (mode == "local") return df.localCheckpoint(eager = true)
     if (sc.getCheckpointDir.isEmpty) {
       // The tmpdir fallback is DRIVER/EXECUTOR-LOCAL: on a real cluster

@@ -37,6 +37,22 @@ object SurveyQueries {
 
   // ---- survey_rows: input for clean_rows / profiling, derived from events
 
+  /** Lake-fixture writer: `df` (one partition) as the single parquet file
+    * `dir/data/name`; returns its row count from the footer (driver-side
+    * metadata read — df.count() would re-run the whole derivation). */
+  private def writeDataFile(dir: String, name: String, df: DataFrame): Long = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val tmp = s"$dir/.tmp-$name"
+    df.write.mode("overwrite").parquet(tmp)
+    val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
+      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/data"))
+    require(fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/data/$name")))
+    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    graft.sources.ParquetScan.rowCount(df.sparkSession, s"$dir/data/$name")
+  }
+
   private def surveyRows(s: SparkSession, d: String): DataFrame = {
     val e = Tables.events(s, d)
     val id = col("event_id")
@@ -1347,7 +1363,7 @@ object SurveyQueries {
 
   /** maintenance_snapshot_evolution: schema evolution over an append
     * chain — a later append carries a column the base commit never had
-    * (`o_tier`), and the `mergeSchema` read unions the footer schemas
+    * (`o_tier`), and the snapshot read unions the footer schemas
     * across the chain's immutable dirs so pre-evolution rows surface
     * NULL there (parquet's standard evolution contract; nothing is
     * rewritten — the base dir's files never change). The gate rolls the
@@ -1374,7 +1390,7 @@ object SurveyQueries {
           .withColumn("o_tier",
             when(col("o_totalprice") >= 100000, lit("high")).otherwise(lit("low"))),
         root)
-      graft.sources.SnapshotTable.read(s, root, mergeSchema = true)
+      graft.sources.SnapshotTable.read(s, root)
         .groupBy(coalesce(col("o_tier"), lit("pre_evolution")).as("o_tier"))
         .agg(count(lit(1)).as("n_rows"),
           sum(col("o_totalprice")).cast("double").as("sum_price"))
@@ -3649,22 +3665,8 @@ object SurveyQueries {
       fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
       val orders = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"))
-      def writeFile(name: String, df: org.apache.spark.sql.DataFrame): Long = {
-        val tmp = s"$dir/.tmp-$name"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/data"))
-        require(fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/data/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        // row count from the renamed file's parquet footer (driver-side
-        // metadata read) — df.count() re-ran the whole derivation
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/data/$name"),
-          s.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
+      def writeFile(name: String, df: DataFrame): Long =
+        writeDataFile(dir, name, df.coalesce(1))
       val ic = graft.sources.IcebergCompat
       val na = writeFile("a.parquet", orders.filter(col("o_orderkey") % 2 === 0))
       val nb = writeFile("b.parquet", orders.filter(col("o_orderkey") % 2 === 1))
@@ -4018,22 +4020,8 @@ object SurveyQueries {
       fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"))
-      def writeSlice(name: String, df: org.apache.spark.sql.DataFrame): Long = {
-        val tmp = s"$dir/.tmp-$name"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/data"))
-        require(fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/data/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        // row count from the renamed file's parquet footer (driver-side
-        // metadata read) — df.count() re-ran the whole derivation
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/data/$name"),
-          s.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
+      def writeSlice(name: String, df: DataFrame): Long =
+        writeDataFile(dir, name, df.coalesce(1))
       val ic = graft.sources.IcebergCompat
       val na = writeSlice("even_v1.parquet", li.filter(col("l_orderkey") % 2 === 0))
       val nb = writeSlice("odd.parquet", li.filter(col("l_orderkey") % 2 === 1))
@@ -4079,23 +4067,8 @@ object SurveyQueries {
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"),
         (col("l_orderkey") % 3).as("m"))
-      def writeSlice(name: String, m: Int): Long = {
-        val tmp = s"$dir/.tmp-$name"
-        val df = li.filter(col("m") === m)
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/data"))
-        require(fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/data/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        // row count from the renamed file's parquet footer (driver-side
-        // metadata read) — df.count() re-ran the whole derivation
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/data/$name"),
-          s.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
+      def writeSlice(name: String, m: Int): Long =
+        writeDataFile(dir, name, li.filter(col("m") === m).coalesce(1))
       val ic = graft.sources.IcebergCompat
       val n0 = writeSlice("s0.parquet", 0)
       val m1 = ic.writeManifest(s, dir, "m1.avro", Seq((1, "data/s0.parquet", n0)))
@@ -4141,22 +4114,8 @@ object SurveyQueries {
       fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
       val orders = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"))
-      def writeFile(name: String, df: org.apache.spark.sql.DataFrame): Long = {
-        val tmp = s"$dir/.tmp-$name"
-        df.write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/data"))
-        require(fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/data/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        // row count from the renamed file's parquet footer (driver-side
-        // metadata read) — df.count() re-ran the whole derivation
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/data/$name"),
-          s.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
+      def writeFile(name: String, df: DataFrame): Long =
+        writeDataFile(dir, name, df)
       // pinned physical row order: position p holds the (p+1)-smallest okey
       val na = writeFile("base.parquet",
         orders.coalesce(1).sortWithinPartitions("o_orderkey"))
@@ -4228,22 +4187,8 @@ object SurveyQueries {
       fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
       val orders = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"))
-      def writeFile(name: String, df: org.apache.spark.sql.DataFrame): Long = {
-        val tmp = s"$dir/.tmp-$name"
-        df.write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/data"))
-        require(fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/data/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        // row count from the renamed file's parquet footer (driver-side
-        // metadata read) — df.count() re-ran the whole derivation
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/data/$name"),
-          s.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
+      def writeFile(name: String, df: DataFrame): Long =
+        writeDataFile(dir, name, df)
       // pinned physical order per slice: position p holds the
       // (p+1)-smallest o_orderkey of that slice
       val na = writeFile("a.parquet", orders.filter(col("o_orderkey") % 2 === 0)

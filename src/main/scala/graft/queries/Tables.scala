@@ -6,18 +6,16 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
 
 /** Readers over the driver-provided parquet tables (TESTDATA.md). */
 object Tables {
-  /** One driver-side footer read supplies the schema explicitly:
+  /** Reads through the shared scan path ([[graft.sources.ParquetScan]]):
+    * one driver-side footer read supplies the schema —
     * `spark.read.parquet(path)` without a schema launches a (tiny)
-    * schema-inference Spark job PER CALL — measured as one
+    * schema-inference Spark job PER CALL, measured as one
     * `parquet at Tables.scala` job inside every gate, a fixed cost the
     * whole 378-query registry paid. Same declared types bit-for-bit
     * (FooterSchemaSpec pins every driver table, including the
     * nanos-timestamp events encoding). */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val f = s"$sfDir/$name.parquet"
-    spark.read.schema(org.apache.spark.sql.graftbridge.Bridge
-      .parquetFooterSchema(spark, f)).parquet(f)
-  }
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    graft.sources.ParquetScan.readFiles(spark, Seq(s"$sfDir/$name.parquet"))
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")

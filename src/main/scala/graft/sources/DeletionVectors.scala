@@ -270,9 +270,10 @@ object DeletionVectors {
     * the deleted row indexes. Inline (`i`) descriptors decode from the
     * log itself; relative (`u`) ones read the sidecar at `offset` and
     * check the CRC-32; absolute (`p`) paths are refused like absolute
-    * `add` paths (external files are out of this reader's scope). */
-  def readDeleted(fs: FileSystem, tableDir: String, d: Descriptor): Array[Long] =
-    d.storageType match {
+    * `add` paths (external files are out of this reader's scope). Every
+    * read checks the position count against the declared cardinality. */
+  def readDeleted(fs: FileSystem, tableDir: String, d: Descriptor): Array[Long] = {
+    val positions = d.storageType match {
       case "i" => deserialize(z85Decode(d.pathOrInlineDv))
       case "u" =>
         val p = sidecarPath(tableDir, d)
@@ -302,6 +303,11 @@ object DeletionVectors {
       case other => throw new IllegalArgumentException(
         s"unknown deletion-vector storageType '$other'")
     }
+    require(positions.length.toLong == d.cardinality,
+      s"deletion vector ${d.pathOrInlineDv} declares cardinality " +
+        s"${d.cardinality} but holds ${positions.length} positions")
+    positions
+  }
 
   /** Fixture/export writer: serialize `positions`, write a fresh
     * one-DV sidecar under `tableDir`, and return the descriptor to

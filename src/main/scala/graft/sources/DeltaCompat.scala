@@ -38,10 +38,10 @@ import org.apache.spark.sql.functions._
   * DELETION VECTORS and COLUMN MAPPING — the two default-on features of
   * tables written by recent Delta writers — are read-supported:
   *  - an `add.deletionVector` descriptor (inline or sidecar,
-  *    [[DeletionVectors]]) masks that file's deleted row indexes via an
-  *    anti-join on (`_metadata.file_path`, `_metadata.row_index`) — the
-  *    bitmap plane stays driver-side metadata (bounded per file), the
-  *    data plane never materializes deleted rows past the scan;
+  *    [[DeletionVectors]]) masks that file's deleted row indexes via
+  *    the shared scan's position-delete anti-join ([[ParquetScan]]) —
+  *    the bitmap plane stays driver-side metadata (bounded per file),
+  *    the data plane never materializes deleted rows past the scan;
   *  - `delta.columnMapping.mode` = `name`/`id` resolves physical
   *    parquet columns back to the logical schema from
   *    `metaData.schemaString` (writers under EITHER mode must record
@@ -192,7 +192,7 @@ object DeltaCompat {
   private def checkpointActions(spark: SparkSession, files: Seq[String],
       commit: Long): Seq[LogAction] = {
     import org.apache.spark.sql.types._
-    val df = TableIO.readFilesFooter(spark, files)
+    val df = ParquetScan.readFiles(spark, files)
     val schema = df.schema
     def sub(name: String): Option[(Int, StructType)] =
       schema.fieldNames.indexOf(name) match {
@@ -474,6 +474,66 @@ object DeltaCompat {
     actions.filter(_.meta.isDefined)
       .sortBy(a => (a.commit, a.seq)).lastOption.flatMap(_.meta)
 
+  /** The logical schema a metaData action declares (`schemaString`). */
+  private def declaredOf(meta: Option[TableMeta])
+      : Option[org.apache.spark.sql.types.StructType] =
+    meta.flatMap(_.schemaString).map(ss =>
+      org.apache.spark.sql.types.DataType.fromJson(ss)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+
+  private val PhysicalNameKey = "delta.columnMapping.physicalName"
+
+  /** The schema the table's DATA FILES carry, from the declared one:
+    * partition columns dropped (their values live in the log), fields
+    * under their physical names when column mapping is on. None when
+    * the log declares no schema (the shared footer rule applies). */
+  private def fileSchema(meta: Option[TableMeta])
+      : Option[org.apache.spark.sql.types.StructType] =
+    meta.flatMap(m => declaredOf(Some(m)).map(st =>
+      org.apache.spark.sql.types.StructType(st.fields
+        .filterNot(f => m.partitionCols.contains(f.name))
+        .map { f =>
+          if (m.cmMode == "none") f
+          else {
+            require(f.metadata.contains(PhysicalNameKey),
+              s"column mapping mode=${m.cmMode} but field '${f.name}' has " +
+                "no physicalName — malformed metaData")
+            f.copy(name = f.metadata.getString(PhysicalNameKey))
+          }
+        })))
+
+  /** The read schema of the data files at `asOf` (head when None):
+    * declared when the log carries a schemaString, else the shared
+    * footer rule over the live files. Refuses what raw data files cannot
+    * serve (see [[liveFiles]]) — the streaming source's schema. */
+  private[graft] def dataSchema(spark: SparkSession, dir: String,
+      asOf: Option[Long]): org.apache.spark.sql.types.StructType = {
+    val files = liveFiles(spark, dir, asOf)
+    ParquetScan.readSchema(spark, files,
+      fileSchema(latestMetaLocal(loadLog(spark, dir, asOf)._1)))
+  }
+
+  /** The deleted positions of every live file carrying a deletion
+    * vector, as the shared scan's driver-resolved position deletes (the
+    * bitmap plane is metadata, bounded per file). */
+  private def dvDeletes(spark: SparkSession, dir: String,
+      files: Seq[(String, Option[DeletionVectors.Descriptor])]): Seq[(String, Long, Long)] = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    files.flatMap {
+      case (p, Some(d)) => DeletionVectors.readDeleted(fs, dir, d).toSeq.map(pos => (p, pos, 0L))
+      case _ => Nil
+    }
+  }
+
+  /** Restore partition columns as typed literals (the log stores every
+    * partition value as a string; NULL is the protocol's null partition). */
+  private def withPartitionValues(df: DataFrame,
+      logical: org.apache.spark.sql.types.StructType,
+      values: Seq[(String, Option[String])]): DataFrame =
+    values.foldLeft(df) { case (d, (c, v)) =>
+      d.withColumn(c, lit(v.orNull).cast(logical(c).dataType))
+    }
+
   private def decodePath(dir: String, raw: String): String = {
     // protocol: relative percent-encoded URI; absolute = external file
     val uri = try new java.net.URI(raw) catch {
@@ -655,12 +715,7 @@ object DeltaCompat {
     fs.delete(tmp, true)
     // _last_checkpoint size from the parquet footers — driver-side
     // metadata reads, no count() job
-    val n = targets.map { t =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(t,
-        spark.sparkContext.hadoopConfiguration)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
+    val n = targets.map(t => ParquetScan.rowCount(spark, t.toString)).sum
     val partsField = if (parts == 1) "" else s""","parts":${written.length}"""
     val out = fs.create(new Path(s"$dir/_delta_log/_last_checkpoint"), true)
     try out.write(s"""{"version":$v,"size":$n$partsField}""".getBytes("UTF-8"))
@@ -677,6 +732,30 @@ object DeltaCompat {
   def latestVersion(spark: SparkSession, dir: String): Long =
     loadLog(spark, dir)._2
 
+  /** The parsed, protocol-guarded actions of the JSON commits in
+    * `(fromV, toV]` — a bounded metadata window, parsed driver-side (no
+    * Spark job). Every commit in it must still exist (not vacuumed past
+    * a checkpoint). */
+  private def windowActions(spark: SparkSession, dir: String,
+      fromV: Long, toV: Long): Seq[LogAction] = {
+    require(fromV < toV, s"empty commit window ($fromV, $toV]")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val logDir = new Path(s"$dir/_delta_log")
+    require(fs.exists(logDir), s"$dir has no _delta_log — not a Delta table")
+    val want = ((fromV + 1) to toV).map(v => f"$v%020d.json")
+    val missing = want.filterNot(n => fs.exists(new Path(logDir, n)))
+    require(missing.isEmpty,
+      s"commits ${missing.mkString(", ")} are missing at $dir (vacuumed " +
+        "past a checkpoint?) — the window cannot be replayed")
+    val acts = want.toSeq.flatMap { n =>
+      val v = n.stripSuffix(".json").toLong
+      readTextFile(fs, new Path(logDir, n)).linesIterator.zipWithIndex
+        .flatMap { case (line, i) => parseActionLine(line, v, i) }.toSeq
+    }
+    guardLocal(acts, dir)
+    acts
+  }
+
   /** INCREMENTAL PULL: the file paths ADDED by commits in `(fromV,
     * toV]` — the Delta-side half of a continuous foreign-lake sync
     * (pair with [[SnapshotTable.syncAppend]] on the destination).
@@ -689,22 +768,7 @@ object DeltaCompat {
     * still exist (not vacuumed past a checkpoint). */
   def addedBetween(spark: SparkSession, dir: String,
       fromV: Long, toV: Long): Seq[String] = {
-    require(fromV < toV, s"empty commit window ($fromV, $toV]")
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logDir = new Path(s"$dir/_delta_log")
-    require(fs.exists(logDir), s"$dir has no _delta_log — not a Delta table")
-    val want = ((fromV + 1) to toV).map(v => f"$v%020d.json")
-    val missing = want.filterNot(n => fs.exists(new Path(logDir, n)))
-    require(missing.isEmpty,
-      s"commits ${missing.mkString(", ")} are missing at $dir (vacuumed " +
-        "past a checkpoint?) — the incremental window cannot be replayed")
-    // bounded metadata window: parsed driver-side, no Spark job
-    val acts = want.toSeq.flatMap { n =>
-      val v = n.stripSuffix(".json").toLong
-      readTextFile(fs, new Path(logDir, n)).linesIterator.zipWithIndex
-        .flatMap { case (line, i) => parseActionLine(line, v, i) }.toSeq
-    }
-    guardLocal(acts, dir)
+    val acts = windowActions(spark, dir, fromV, toV)
     require(!acts.exists(_.addDv.nonEmpty),
       s"window ($fromV, $toV] at $dir attaches deletion vectors — " +
         "row-level deletes, not an append-only window; re-read or upsert")
@@ -733,7 +797,8 @@ object DeltaCompat {
       fromV: Long, toV: Long): DataFrame = {
     val files = addedBetween(spark, dir, fromV, toV)
     require(files.nonEmpty, s"no files added in ($fromV, $toV] at $dir")
-    TableIO.readFilesFooter(spark, files)
+    ParquetScan.readFiles(spark, files,
+      fileSchema(latestMetaLocal(loadLog(spark, dir)._1)))
   }
 
   /** CHANGE DATA FEED over `(fromV, toV]` — the consumption mode that
@@ -755,15 +820,16 @@ object DeltaCompat {
     require(files.nonEmpty, s"no data-changing commits in ($fromV, $toV] at $dir")
     // a PARTITIONED table's files lack the partition columns — restore
     // them on the change surface from each file's partitionValues, with
-    // the declared types (like the snapshot read path)
+    // the declared types (like the snapshot read path); every file reads
+    // with the table's current declared schema (cdc files add
+    // _change_type), so an evolved column surfaces across the window
     val meta = latestMetaLocal(loadLog(spark, dir)._1)
     val partCols = meta.map(_.partitionCols).getOrElse(Nil)
-    val logical = meta.flatMap(_.schemaString).map(ss =>
-      org.apache.spark.sql.types.DataType.fromJson(ss)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    val logical = declaredOf(meta)
     require(partCols.isEmpty || logical.nonEmpty,
       s"Delta table at $dir is partitioned but declares no schemaString — " +
         "partition column types cannot be restored on the change feed")
+    val schema = fileSchema(meta)
     // one read per (change kind, commit, partition tuple) group — cdc
     // files carry their own _change_type column; derived groups get it
     // as a literal
@@ -772,16 +838,15 @@ object DeltaCompat {
         partCols.map(c => f.partitionValues.get(c).flatten)))
       .toSeq
       .sortBy { case ((ct, v, pv), _) =>
-        (v, ct.getOrElse(""), pv.map(_.getOrElse(" ")).mkString(""))
+        (v, ct.getOrElse(""), pv.map(_.getOrElse("\u0000")).mkString("\u0001"))
       }
       .map { case ((ct, v, pv), group) =>
-        var df = TableIO.readFilesFooter(spark, group.map(_.path))
-        partCols.zip(pv).foreach { case (c, value) =>
-          val f = logical.get(logical.get.fieldIndex(c))
-          df = df.withColumn(c,
-            value.map(s => lit(s).cast(f.dataType))
-              .getOrElse(lit(null).cast(f.dataType)))
-        }
+        val df = withPartitionValues(
+          ParquetScan.readFiles(spark, group.map(_.path),
+            if (ct.isEmpty) schema.map(_.add("_change_type",
+              org.apache.spark.sql.types.StringType))
+            else schema),
+          logical.orNull, partCols.zip(pv))
         ct.map(c => df.withColumn("_change_type", lit(c))).getOrElse(df)
           .withColumn("_commit_version", lit(v))
       }
@@ -811,22 +876,8 @@ object DeltaCompat {
     * [[readChangeFeed]] restores as typed columns. */
   def changeFilesBetween(spark: SparkSession, dir: String,
       fromV: Long, toV: Long): Seq[ChangeFile] = {
-    require(fromV < toV, s"empty commit window ($fromV, $toV]")
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logDir = new Path(s"$dir/_delta_log")
-    require(fs.exists(logDir), s"$dir has no _delta_log — not a Delta table")
-    val want = ((fromV + 1) to toV).map(v => f"$v%020d.json")
-    val missing = want.filterNot(n => fs.exists(new Path(logDir, n)))
-    require(missing.isEmpty,
-      s"commits ${missing.mkString(", ")} are missing at $dir (vacuumed " +
-        "past a checkpoint?) — the change window cannot be replayed")
-    // bounded metadata window: parsed driver-side, no Spark job
-    val acts = want.toSeq.flatMap { n =>
-      val v = n.stripSuffix(".json").toLong
-      readTextFile(fs, new Path(logDir, n)).linesIterator.zipWithIndex
-        .flatMap { case (line, i) => parseActionLine(line, v, i) }.toSeq
-    }
-    guardLocal(acts, dir)
+    val acts = windowActions(spark, dir, fromV, toV)
     // partitioned tables: removed files resolve their partition values
     // from the state BEFORE their commit (their add is outside the
     // per-commit slice) — one metadata-plane replay per remove commit,
@@ -894,20 +945,19 @@ object DeltaCompat {
     // discovery runs over LIVE rows only — existing masks applied, so
     // an already-deleted row can neither re-match nor re-enter the
     // change feed
-    val live = maskedWithProvenance(spark, fs, dir, withDv)
+    val live = maskedWithProvenance(spark, dir, latestMetaLocal(acts), withDv)
     val hits = live.filter(predicate)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val matched = hits.select(col("__gm_file"), col("__gm_pos"))
+      val matched = hits.select(ParquetScan.fileKey(col(ParquetScan.FileCol)),
+          col(ParquetScan.PosCol))
         .collect().groupBy(_.getString(0))
         .map { case (f, rs) => f -> rs.map(_.getLong(1)) }
       if (matched.isEmpty) return v
-      val qualifiedOf = withDv.map { case (p, d) =>
-        fs.makeQualified(new Path(p)).toString -> (p, d)
-      }.toMap
-      val lines = matched.toSeq.sortBy(_._1).map { case (qf, positions) =>
-        val (full, oldDv) = qualifiedOf.getOrElse(qf,
-          throw new IllegalStateException(s"matched unknown file $qf"))
+      val liveOf = withDv.map { case (p, d) => ParquetScan.fileKey(spark, p) -> (p, d) }.toMap
+      val lines = matched.toSeq.sortBy(_._1).map { case (key, positions) =>
+        val (full, oldDv) = liveOf.getOrElse(key,
+          throw new IllegalStateException(s"matched unknown file $key"))
         val existing = oldDv.map(d => DeletionVectors.readDeleted(fs, dir, d))
           .getOrElse(Array.emptyLongArray)
         val d = DeletionVectors.writeSidecar(fs, dir, existing ++ positions)
@@ -918,7 +968,7 @@ object DeltaCompat {
       // CHANGE DATA FEED: the deleted rows' values are in hand — record
       // them as explicit cdc, the only way a DV commit's row-level delta
       // is consumable (readChangeFeed refuses DV commits without cdc)
-      val dataCols = live.columns.filterNot(_.startsWith("__gm")).toSeq
+      val dataCols = dataColumns(live)
       val cdcLines = writeCdc(spark, fs, dir, next,
         hits.select(dataCols.map(c => col(s"`$c`")): _*)
           .withColumn("_change_type", lit("delete")))
@@ -936,30 +986,20 @@ object DeltaCompat {
   }
 
   /** The live rows of the table with rewrite provenance — every data
-    * column plus `__gm_file` (the qualified source-file URI) and
-    * `__gm_pos` (row index), deletion-vector masks APPLIED. The shared
-    * substrate of the copy-on-write writers: a rewrite needs to know
-    * which file each surviving row came from. */
-  private def maskedWithProvenance(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String,
+    * column (read with the declared schema) plus the shared scan's
+    * [[ParquetScan.FileCol]] / [[ParquetScan.PosCol]], deletion-vector
+    * masks APPLIED. The shared substrate of the copy-on-write writers: a
+    * rewrite needs to know which file each surviving row came from. */
+  private def maskedWithProvenance(spark: SparkSession, dir: String,
+      meta: Option[TableMeta],
       withDv: Seq[(String, Option[DeletionVectors.Descriptor])]): DataFrame = {
     require(withDv.nonEmpty, s"Delta table at $dir has no live files")
-    var df = TableIO.readFilesFooter(spark, withDv.map(_._1))
-      .withColumn("__gm_file", col("_metadata.file_path"))
-      .withColumn("__gm_pos", col("_metadata.row_index"))
-    val dvs = withDv.collect { case (p, Some(d)) => (p, d) }
-    if (dvs.nonEmpty) {
-      val deleted: Seq[(String, Long)] = dvs.flatMap { case (p, d) =>
-        val qualified = fs.makeQualified(new Path(p)).toString
-        DeletionVectors.readDeleted(fs, dir, d).map(pos => (qualified, pos))
-      }
-      df = df.join(broadcast(spark.createDataFrame(deleted)
-          .toDF("__dv_file", "__dv_pos")),
-        col("__gm_file") === col("__dv_file") &&
-          col("__gm_pos") === col("__dv_pos"), "left_anti")
-    }
-    df
+    ParquetScan.readFiles(spark, withDv.map(_._1), fileSchema(meta),
+      dvDeletes(spark, dir, withDv), provenance = true)
   }
+
+  private def dataColumns(masked: DataFrame): Seq[String] =
+    masked.columns.toSeq.filterNot(Set(ParquetScan.FileCol, ParquetScan.PosCol))
 
   /** Percent-encoded table-relative form of an absolute file path, as
     * the protocol wants `add`/`remove` paths. */
@@ -1030,8 +1070,8 @@ object DeltaCompat {
     require(srcStats.getLong(1) <= 1L,
       s"source carries duplicate keys on (${keyCols.mkString(", ")}) — " +
         "a multi-match merge is ambiguous")
-    val base = maskedWithProvenance(spark, fs, dir, withDv)
-    val dataCols = base.columns.filterNot(_.startsWith("__gm")).toSeq
+    val base = maskedWithProvenance(spark, dir, latestMetaLocal(acts), withDv)
+    val dataCols = dataColumns(base)
     require(source.columns.sorted.toSeq == dataCols.sorted,
       s"source schema (${source.columns.sorted.mkString(", ")}) != table " +
         s"schema (${dataCols.sorted.mkString(", ")})")
@@ -1039,12 +1079,13 @@ object DeltaCompat {
     // needed on the probe side (§2.4); keys are proven unique above
     val srcKeys = source.select(keyExprs: _*)
     // metadata-sized: one row per file that holds a matched key
+    val fileKey = ParquetScan.fileKey(col(ParquetScan.FileCol))
     val matchedFiles = base.join(srcKeys, keyCols, "left_semi")
-      .select(col("__gm_file")).distinct()
+      .select(fileKey).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
     val rewritten =
       if (matchedFiles.isEmpty) base.filter(lit(false))
-      else base.filter(col("__gm_file").isin(matchedFiles: _*))
+      else base.filter(fileKey.isin(matchedFiles: _*))
     // preimages: the current values of replaced rows (cdc + survivors)
     val pre = rewritten.join(source, keyCols, "left_semi")
       .select(dataCols.map(c => col(s"`$c`")): _*)
@@ -1079,8 +1120,9 @@ object DeltaCompat {
           .unionByName(inserts.select(dataCols.map(c => col(s"`$c`")): _*)
             .withColumn("_change_type", lit("insert"))))
         .map(p => s"""{"cdc":{"path":"$p","dataChange":false}}""")
-      val removes = matchedFiles.map { qf =>
-        s"""{"remove":{"path":"${relativeEnc(fs, dir, qf)}","dataChange":true}}"""
+      val livePath = withDv.map { case (p, _) => ParquetScan.fileKey(spark, p) -> p }.toMap
+      val removes = matchedFiles.map { key =>
+        s"""{"remove":{"path":"${relativeEnc(fs, dir, livePath(key))}","dataChange":true}}"""
       }
       val adds = addNames.map { n =>
         s"""{"add":{"path":"$n","dataChange":true}}"""
@@ -1114,9 +1156,9 @@ object DeltaCompat {
     if (dvd.isEmpty) return v
     // mask + rewrite ONLY the DV'd files, as one job; clean files are
     // not touched (this is deletion materialization, not compaction)
-    val masked = maskedWithProvenance(spark, fs, dir,
+    val masked = maskedWithProvenance(spark, dir, latestMetaLocal(acts),
       dvd.map { case (p, d) => (p, Some(d)) })
-    val dataCols = masked.columns.filterNot(_.startsWith("__gm")).toSeq
+    val dataCols = dataColumns(masked)
     val next = v + 1
     val tmp = s"$dir/.tmp-optimize-$next"
     masked.select(dataCols.map(c => col(s"`$c`")): _*)
@@ -1178,15 +1220,7 @@ object DeltaCompat {
         .getOrElse("")
       // a partitioned file's values ride the re-add, or the state loses
       // them (last add wins)
-      val pvJson =
-        if (f.partitionValues.isEmpty) ""
-        else {
-          val entries = f.partitionValues.toSeq.sortBy(_._1).map { case (c, v) =>
-            s"${pvMapper.writeValueAsString(c)}:" +
-              v.map(pvMapper.writeValueAsString).getOrElse("null")
-          }
-          s""","partitionValues":{${entries.mkString(",")}}"""
-        }
+      val pvJson = pvField(f.partitionValues.toSeq.sortBy(_._1))
       s"""{"add":{"path":"${relativeEnc(fs, dir, f.path)}"$pvJson,"dataChange":true$dvJson}}"""
     }
     require(removes.nonEmpty || adds.nonEmpty,
@@ -1265,76 +1299,26 @@ object DeltaCompat {
       asOf: Option[Long] = None): DataFrame = {
     val (acts, _) = loadLog(spark, dir, asOf)
     val meta = latestMetaLocal(acts)
-    val partCols = meta.map(_.partitionCols).getOrElse(Nil)
     val live = liveFromActions(dir, acts) // same parsed slice: one load
-    if (partCols.nonEmpty)
-      return readPartitioned(spark, dir, asOf, meta.get, live)
-    val withDv = live.map(f => (f.path, f.dv))
-    require(withDv.nonEmpty, s"Delta table at $dir has no live files" +
+    require(live.nonEmpty, s"Delta table at $dir has no live files" +
       asOf.map(v => s" at version $v").getOrElse(""))
-    val declared: Option[org.apache.spark.sql.types.StructType] =
-      meta.flatMap(_.schemaString).map(ss =>
-        org.apache.spark.sql.types.DataType.fromJson(ss)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val cmMode = meta.map(_.cmMode).getOrElse("none")
+    if (meta.exists(_.partitionCols.nonEmpty))
+      return readPartitioned(spark, dir, meta.get, live)
     // under column mapping the files carry PHYSICAL names: read against
-    // the physical twin of the declared schema (same types/nullability,
-    // physicalName per field), then rename after the DV mask below
-    val readSchema: Option[org.apache.spark.sql.types.StructType] =
-      declared.map { st =>
-        if (cmMode == "none") st
-        else org.apache.spark.sql.types.StructType(st.fields.map { f =>
-          val key = "delta.columnMapping.physicalName"
-          require(f.metadata.contains(key),
-            s"column mapping mode=$cmMode but field '${f.name}' has no " +
-              "physicalName — malformed metaData")
-          f.copy(name = f.metadata.getString(key))
-        })
-      }
-    var df = readSchema match {
-      case Some(st) => spark.read.schema(st).parquet(withDv.map(_._1): _*)
-      case None => TableIO.readFilesFooter(spark, withDv.map(_._1))
-    }
-    val dvs = withDv.collect { case (p, Some(d)) => (p, d) }
-    if (dvs.nonEmpty) {
-      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // the bitmap plane: bounded per file (a DV masks rows of ONE
-      // parquet file), parsed driver-side from KB-scale sidecars/inline
-      // bytes; keyed by the same qualified URI `_metadata.file_path`
-      // renders so the anti-join needs no path normalization tricks
-      val deleted: Seq[(String, Long)] = dvs.flatMap { case (p, d) =>
-        val qualified = fs.makeQualified(new Path(p)).toString
-        val positions = DeletionVectors.readDeleted(fs, dir, d)
-        require(positions.length.toLong == d.cardinality,
-          s"DV for $p declares cardinality ${d.cardinality} but holds " +
-            s"${positions.length} positions")
-        positions.map(pos => (qualified, pos))
-      }
-      val delDf = spark.createDataFrame(deleted).toDF("__dv_file", "__dv_pos")
-      // broadcast the deleted-position side while it is metadata-sized;
-      // a mass-delete table (tens of millions of masked rows) shuffles
-      val side =
-        if (dvs.map(_._2.cardinality).sum <= 4000000L) broadcast(delDf)
-        else delDf
-      val dataCols = df.columns.toSeq
-      df = df
-        .withColumn("__dv_f", col("_metadata.file_path"))
-        .withColumn("__dv_p", col("_metadata.row_index"))
-        .join(side, col("__dv_f") === col("__dv_file") &&
-          col("__dv_p") === col("__dv_pos"), "left_anti")
-        .select(dataCols.map(c => col(s"`$c`")): _*)
-    }
+    // the physical twin of the declared schema, then rename
+    val df = ParquetScan.readFiles(spark, live.map(_.path), fileSchema(meta),
+      dvDeletes(spark, dir, live.map(f => (f.path, f.dv))))
+    val cmMode = meta.map(_.cmMode).getOrElse("none")
     if (cmMode == "name" || cmMode == "id") {
-      val logical = declared.getOrElse(throw
+      val logical = declaredOf(meta).getOrElse(throw
         new IllegalArgumentException(s"Delta table at $dir sets " +
           s"delta.columnMapping.mode=$cmMode but its metaData carries no " +
           "schemaString — physical columns cannot be resolved"))
-      val key = "delta.columnMapping.physicalName"
       val renames = logical.fields.map { f =>
         require(!f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType],
           s"nested column mapping (field '${f.name}') is out of scope " +
             "for this compat reader")
-        col(s"`${f.metadata.getString(key)}`").as(f.name)
+        col(s"`${f.metadata.getString(PhysicalNameKey)}`").as(f.name)
       }
       df.select(renames.toSeq: _*)
     } else df
@@ -1349,64 +1333,43 @@ object DeltaCompat {
     *    constant-folds filters on partition columns per branch, so a
     *    pruned branch's scan never runs (real partition pruning);
     *  - many tuples: ONE scan of all files plus a broadcast join from
-    *    `_metadata.file_path` to the values — no plan blow-up, no
+    *    the scan's file provenance to the values — no plan blow-up, no
     *    per-branch pruning (callers wanting pruned scans at huge
     *    partition counts filter the file list first).
-    * Deletion vectors compose (provenance extracted per branch before
-    * the union); column mapping + partitioning together refuse. */
+    * Deletion vectors are masked inside each scan, before the union or
+    * join; column mapping + partitioning together refuse. */
   private def readPartitioned(spark: SparkSession, dir: String,
-      asOf: Option[Long], meta: TableMeta,
-      files: Seq[LiveFile]): DataFrame = {
+      meta: TableMeta, files: Seq[LiveFile]): DataFrame = {
     val partCols = meta.partitionCols
     require(meta.cmMode == "none",
       s"Delta table at $dir combines column mapping (mode=${meta.cmMode}) " +
         "with partitioning — out of scope for this compat reader")
-    val logical = meta.schemaString.map(ss =>
-      org.apache.spark.sql.types.DataType.fromJson(ss)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(throw new IllegalArgumentException(
-        s"Delta table at $dir is partitioned but its metaData carries " +
-          "no schemaString — partition column types cannot be resolved"))
+    val logical = declaredOf(Some(meta)).getOrElse(throw new IllegalArgumentException(
+      s"Delta table at $dir is partitioned but its metaData carries " +
+        "no schemaString — partition column types cannot be resolved"))
     val missing = partCols.filterNot(logical.fieldNames.contains)
     require(missing.isEmpty, s"partition columns ${missing.mkString(", ")} " +
       s"not in the declared schema of $dir")
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      logical.fields.filterNot(f => partCols.contains(f.name)))
-    require(files.nonEmpty, s"Delta table at $dir has no live files" +
-      asOf.map(v => s" at version $v").getOrElse(""))
     files.foreach { f =>
       val absent = partCols.filterNot(f.partitionValues.contains)
       require(absent.isEmpty, s"add action for ${f.path} lacks partition " +
         s"values for (${absent.mkString(", ")}) — malformed log")
     }
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dvs = files.collect { case LiveFile(p, Some(d), _) => (p, d) }
-    def withProv(df: DataFrame): DataFrame =
-      if (dvs.isEmpty) df
-      else df.withColumn("__dv_f", col("_metadata.file_path"))
-        .withColumn("__dv_p", col("_metadata.row_index"))
-    def litFor(c: String, v: Option[String]): org.apache.spark.sql.Column = {
-      val f = logical(logical.fieldIndex(c))
-      v.map(s => lit(s).cast(f.dataType)).getOrElse(lit(null).cast(f.dataType))
-        .as(c)
-    }
+    def scan(fs: Seq[LiveFile], provenance: Boolean): DataFrame =
+      ParquetScan.readFiles(spark, fs.map(_.path), fileSchema(Some(meta)),
+        dvDeletes(spark, dir, fs.map(f => (f.path, f.dv))), provenance = provenance)
     val groups = files.groupBy(f => partCols.map(c => f.partitionValues(c)))
-    var df =
+    val df =
       if (groups.size <= 64) {
         groups.toSeq.sortBy(_._1.map(_.getOrElse("\u0000")).mkString("\u0001"))
           .map { case (pv, gfs) =>
-            var b = withProv(
-              spark.read.schema(dataSchema).parquet(gfs.map(_.path): _*))
-            partCols.zip(pv).foreach { case (c, v) =>
-              b = b.withColumn(c, litFor(c, v))
-            }
-            b
+            withPartitionValues(scan(gfs, provenance = false), logical,
+              partCols.zip(pv))
           }.reduce(_.unionByName(_))
       } else {
         val pvRows = files.map { f =>
-          org.apache.spark.sql.Row.fromSeq(
-            fs.makeQualified(new Path(f.path)).toString +:
-              partCols.map(c => f.partitionValues(c).orNull))
+          org.apache.spark.sql.Row.fromSeq(ParquetScan.fileKey(spark, f.path) +:
+            partCols.map(c => f.partitionValues(c).orNull))
         }
         val pvSchema = org.apache.spark.sql.types.StructType(
           org.apache.spark.sql.types.StructField("__pv_f",
@@ -1416,28 +1379,56 @@ object DeltaCompat {
         val pvDf = broadcast(spark.createDataFrame(
           { val l = new java.util.ArrayList[org.apache.spark.sql.Row]()
             pvRows.foreach(l.add); l }, pvSchema))
-        var b = withProv(spark.read.schema(dataSchema)
-          .parquet(files.map(_.path): _*))
-          .withColumn("__pv_f", col("_metadata.file_path"))
+        var b = scan(files, provenance = true)
+          .withColumn("__pv_f", ParquetScan.fileKey(col(ParquetScan.FileCol)))
           .join(pvDf, Seq("__pv_f"))
         partCols.foreach { c =>
-          val f = logical(logical.fieldIndex(c))
-          b = b.withColumn(c, col(s"__pv_$c").cast(f.dataType))
+          b = b.withColumn(c, col(s"__pv_$c").cast(logical(c).dataType))
         }
-        b.drop("__pv_f" +: partCols.map(c => s"__pv_$c"): _*)
+        b
       }
-    if (dvs.nonEmpty) {
-      val deleted: Seq[(String, Long)] = dvs.flatMap { case (p, d) =>
-        val qualified = fs.makeQualified(new Path(p)).toString
-        DeletionVectors.readDeleted(fs, dir, d).map(pos => (qualified, pos))
-      }
-      df = df.join(broadcast(spark.createDataFrame(deleted)
-          .toDF("__dv_file", "__dv_pos")),
-        col("__dv_f") === col("__dv_file") &&
-          col("__dv_p") === col("__dv_pos"), "left_anti")
-        .drop("__dv_f", "__dv_p")
-    }
     df.select(logical.fieldNames.toSeq.map(c => col(s"`$c`")): _*)
+  }
+
+  /** `,"partitionValues":{...}` for an add action (JSON null = the
+    * protocol's null partition); empty for an unpartitioned file. */
+  private def pvField(pv: Seq[(String, Option[String])]): String =
+    if (pv.isEmpty) ""
+    else pv.map { case (c, v) =>
+      s"${pvMapper.writeValueAsString(c)}:" +
+        v.map(pvMapper.writeValueAsString).getOrElse("null")
+    }.mkString(""","partitionValues":{""", ",", "}")
+
+  /** Write `df` through the temp dir `tmp` into the table root (hive
+    * dirs when `partitionBy` is set) and return one `add` action per
+    * data file, carrying its partition values from its hive path. */
+  private def writeAdds(df: DataFrame, dir: String, tmp: String,
+      partitionBy: Seq[String]): Seq[String] = {
+    val fs = new Path(dir).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val w = df.write.mode("overwrite")
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+      .parquet(tmp)
+    // move data files into the table root, hive dirs preserved
+    val tmpRoot = fs.makeQualified(new Path(tmp)).toUri.getPath
+    val moved = ParquetScan.parquetFiles(fs, new Path(tmp)).map { st =>
+      val rel = st.getPath.toUri.getPath.stripPrefix(tmpRoot).stripPrefix("/")
+      val dst = new Path(s"$dir/$rel")
+      fs.mkdirs(dst.getParent)
+      require(fs.rename(st.getPath, dst), s"rename failed: ${st.getPath}")
+      rel
+    }
+    fs.delete(new Path(tmp), true)
+    require(moved.nonEmpty, s"write into $dir produced no parquet files")
+    moved.sorted.map { rel =>
+      val pv = rel.split('/').dropRight(1).toSeq.map { seg =>
+        val i = seg.indexOf('=')
+        require(i > 0, s"unexpected non-hive path segment '$seg' in $rel")
+        val v = java.net.URLDecoder.decode(seg.substring(i + 1), "UTF-8")
+        seg.substring(0, i) -> (if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v))
+      }
+      val enc = new java.net.URI(null, null, rel, null).getRawPath
+      s"""{"add":{"path":"$enc"${pvField(pv)},"dataChange":true}}"""
+    }
   }
 
   /** CREATE a Delta table at `dir` from `df`, as commit 0 — the
@@ -1457,47 +1448,7 @@ object DeltaCompat {
     val missing = partitionBy.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"partition columns ${missing.mkString(", ")} not in the DataFrame")
-    val tmp = s"$dir/.tmp-create"
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp)
-    // move data files into the table root, hive dirs preserved
-    val moved = scala.collection.mutable.ArrayBuffer.empty[String]
-    val tmpRoot = fs.makeQualified(new Path(tmp)).toUri.getPath
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else if (st.getPath.getName.endsWith(".parquet")) {
-        val rel = st.getPath.toUri.getPath.stripPrefix(tmpRoot).stripPrefix("/")
-        val dst = new Path(s"$dir/$rel")
-        fs.mkdirs(dst.getParent)
-        require(fs.rename(st.getPath, dst), s"rename failed: ${st.getPath}")
-        moved += rel
-      }
-    }
-    walk(new Path(tmp))
-    fs.delete(new Path(tmp), true)
-    require(moved.nonEmpty, "createDeltaTable wrote no parquet files")
-    def pvOf(rel: String): Seq[(String, Option[String])] =
-      rel.split('/').dropRight(1).toSeq.map { seg =>
-        val i = seg.indexOf('=')
-        require(i > 0, s"unexpected non-hive path segment '$seg' in $rel")
-        val c = seg.substring(0, i)
-        val v = java.net.URLDecoder.decode(seg.substring(i + 1), "UTF-8")
-        c -> (if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v))
-      }
-    val adds = moved.sorted.map { rel =>
-      val enc = new java.net.URI(null, null, rel, null).getRawPath
-      val pvJson =
-        if (partitionBy.isEmpty) ""
-        else {
-          val entries = pvOf(rel).map { case (c, v) =>
-            s"${pvMapper.writeValueAsString(c)}:" +
-              v.map(pvMapper.writeValueAsString).getOrElse("null")
-          }
-          s""","partitionValues":{${entries.mkString(",")}}"""
-        }
-      s"""{"add":{"path":"$enc"$pvJson,"dataChange":true}}"""
-    }
+    val adds = writeAdds(df, dir, s"$dir/.tmp-create", partitionBy)
     val schemaJson = pvMapper.writeValueAsString(df.schema.json)
     val partColsJson = partitionBy.map(pvMapper.writeValueAsString)
       .mkString("[", ",", "]")
@@ -1526,55 +1477,13 @@ object DeltaCompat {
     require(meta.cmMode == "none",
       "appendToDeltaTable on a column-mapped table is out of scope " +
         "(files would need physical column names)")
-    meta.schemaString.foreach { ss =>
-      val declared = org.apache.spark.sql.types.DataType.fromJson(ss)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+    declaredOf(Some(meta)).foreach { declared =>
       require(df.columns.sorted.toSeq == declared.fieldNames.sorted.toSeq,
         s"append schema (${df.columns.sorted.mkString(", ")}) != declared " +
           s"(${declared.fieldNames.sorted.mkString(", ")})")
     }
-    val partitionBy = meta.partitionCols
     val next = v + 1
-    val tmp = s"$dir/.tmp-append-$next"
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp)
-    val moved = scala.collection.mutable.ArrayBuffer.empty[String]
-    val tmpRoot = fs.makeQualified(new Path(tmp)).toUri.getPath
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else if (st.getPath.getName.endsWith(".parquet")) {
-        val rel = st.getPath.toUri.getPath.stripPrefix(tmpRoot).stripPrefix("/")
-        val dst = new Path(s"$dir/$rel")
-        fs.mkdirs(dst.getParent)
-        require(fs.rename(st.getPath, dst), s"rename failed: ${st.getPath}")
-        moved += rel
-      }
-    }
-    walk(new Path(tmp))
-    fs.delete(new Path(tmp), true)
-    require(moved.nonEmpty, "append wrote no parquet files")
-    def pvOf(rel: String): Seq[(String, Option[String])] =
-      rel.split('/').dropRight(1).toSeq.map { seg =>
-        val i = seg.indexOf('=')
-        require(i > 0, s"unexpected non-hive path segment '$seg' in $rel")
-        val c = seg.substring(0, i)
-        val value = java.net.URLDecoder.decode(seg.substring(i + 1), "UTF-8")
-        c -> (if (value == "__HIVE_DEFAULT_PARTITION__") None else Some(value))
-      }
-    val adds = moved.sorted.map { rel =>
-      val enc = new java.net.URI(null, null, rel, null).getRawPath
-      val pvJson =
-        if (partitionBy.isEmpty) ""
-        else {
-          val entries = pvOf(rel).map { case (c, value) =>
-            s"${pvMapper.writeValueAsString(c)}:" +
-              value.map(pvMapper.writeValueAsString).getOrElse("null")
-          }
-          s""","partitionValues":{${entries.mkString(",")}}"""
-        }
-      s"""{"add":{"path":"$enc"$pvJson,"dataChange":true}}"""
-    }
+    val adds = writeAdds(df, dir, s"$dir/.tmp-append-$next", meta.partitionCols)
     val out = fs.create(new Path(f"$dir/_delta_log/$next%020d.json"), false)
     try out.write((adds.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
@@ -1597,19 +1506,10 @@ object DeltaCompat {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ids = SnapshotTable.snapshots(spark, snapshotRoot)
     require(ids.nonEmpty, s"no committed snapshot at $snapshotRoot")
-    def filesOf(dir: String): Seq[String] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) {
-          val full = st.getPath.toUri.getPath
-          val root = fs.makeQualified(new Path(snapshotRoot)).toUri.getPath
-          out += full.stripPrefix(root + "/")
-        }
-      }
-      walk(new Path(snapshotRoot, dir))
-      out.toSeq.sorted
-    }
+    val root = fs.makeQualified(new Path(snapshotRoot)).toUri.getPath
+    def filesOf(dir: String): Seq[String] =
+      ParquetScan.parquetFiles(fs, new Path(snapshotRoot, dir))
+        .map(_.getPath.toUri.getPath.stripPrefix(root + "/"))
     val logDir = new Path(s"$snapshotRoot/_delta_log")
     fs.delete(logDir, true) // re-export replaces the previous translation
     fs.mkdirs(logDir)

@@ -121,7 +121,7 @@ object HudiCompat {
   def readHoodieTable(spark: SparkSession, dir: String,
       asOf: Option[String] = None): DataFrame =
     if (hasDeltaCommits(spark, dir)) readMorSnapshot(spark, dir, asOf)
-    else TableIO.readFilesFooter(spark, liveFiles(spark, dir, asOf))
+    else ParquetScan.readFiles(spark, liveFiles(spark, dir, asOf))
 
   /** MERGE-ON-READ snapshot: per file group, the latest completed base
     * file merged with its attached log blocks — the newest version of
@@ -196,20 +196,16 @@ object HudiCompat {
     }
     if (logFiles.isEmpty) {
       require(baseFiles.nonEmpty, s"Hudi table at $dir has no visible files")
-      val plain = spark.read.parquet(baseFiles.toSeq.sorted: _*)
+      val plain = ParquetScan.readFiles(spark, baseFiles.toSeq.sorted)
       return if (!keepInstant) plain
         else plain.withColumn("_hoodie_instant",
           regexp_extract(col("_metadata.file_path"), "_(\\d+)\\.parquet$", 1))
     }
-    // table schema: the base files' parquet schema when any exist,
-    // else the first log block's SCHEMA header
+    // table schema: the base files' read schema (the shared footer
+    // rule) when any exist, else the first log block's SCHEMA header
     val (tableStruct, avroJson): (StructType, String) =
       if (baseFiles.nonEmpty) {
-        // one table = one schema (this writer emits uniform base files);
-        // a single driver-side footer read replaces the Spark
-        // schema-inference job spark.read.parquet(files: _*) launches
-        val st = org.apache.spark.sql.graftbridge.Bridge
-          .parquetFooterSchema(spark, baseFiles.toSeq.sorted.head)
+        val st = ParquetScan.readSchema(spark, baseFiles.toSeq)
         (st, HudiLogFormat.avroOf(st, "hudi_log_record").toString)
       } else {
         val sj = HudiLogFormat.firstSchema(
@@ -241,7 +237,7 @@ object HudiCompat {
     val logDf = spark.createDataFrame(rowsRdd, logStruct)
     val merged =
       if (baseFiles.isEmpty) logDf
-      else spark.read.schema(tableStruct).parquet(baseFiles.toSeq: _*)
+      else ParquetScan.readFiles(spark, baseFiles.toSeq, Some(tableStruct))
         .withColumn("_hoodie_instant",
           regexp_extract(col("_metadata.file_path"), "_(\\d+)\\.parquet$", 1))
         .withColumn("_block", lit(-1)).withColumn("_rec", lit(-1))
@@ -374,7 +370,7 @@ object HudiCompat {
       sinceInstant: String): DataFrame = {
     val files = incrementalFiles(spark, dir, sinceInstant)
     require(files.nonEmpty, s"no file slices after $sinceInstant at $dir")
-    TableIO.readFilesFooter(spark, files)
+    ParquetScan.readFiles(spark, files)
   }
 
   /** CLEAN (the Hudi cleaner, keep-slices-serving-`keepInstant`

@@ -7,7 +7,7 @@ import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Interop front door for the PUBLIC Apache Iceberg table format (the
@@ -30,18 +30,17 @@ import org.apache.spark.sql.functions._
   *
   * FORMAT-V2 ROW-LEVEL DELETES ARE APPLIED, not refused:
   *  - POSITION deletes (`content = 1` files holding `(file_path, pos)`
-  *    rows) anti-join against the data rows' own parquet provenance
-  *    (`_metadata.file_path` / `_metadata.row_index` — exactly the
-  *    coordinates the spec's positions refer to), scoped by the spec's
+  *    rows) mask the data rows by file and row index — exactly the
+  *    coordinates the spec's positions refer to — scoped by the spec's
   *    sequence rule `deleteSeq >= dataSeq`;
   *  - EQUALITY deletes (`content = 2` files whose `equality_ids` name
   *    schema field ids) anti-join on the named columns with the strict
   *    rule `deleteSeq > dataSeq`, so a row re-inserted AFTER the
   *    delete survives — the re-insert case that makes sequence-blind
   *    equality deletion silently wrong.
-  * Both anti-joins broadcast the DELETE side: delete files are
-  * corrections, orders of magnitude smaller than the corpus, and the
-  * data side never reshuffles.
+  * This module resolves WHICH files and deletes apply (manifests,
+  * sequence numbers, the current schema); the read schema and both
+  * anti-joins are [[ParquetScan]]'s, shared with every other layer.
   *
   * FORMAT-V3 DELETION VECTORS are applied too: a content-1 entry with
   * `referenced_data_file` frames a `deletion-vector-v1` blob inside a
@@ -70,12 +69,6 @@ object IcebergCompat {
     else new Path(s"$dir/$p")
   }
 
-  /** Scheme-stripped comparable form of a file URI/path — both
-    * `_metadata.file_path` (`file:/…`) and delete-row `file_path`
-    * values normalize to the plain filesystem path. */
-  private def normPath(c: Column): Column =
-    regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/")
-
   /** The current metadata JSON file: `version-hint.text` when present,
     * else the highest `vN.metadata.json`. */
   def currentMetadataFile(spark: SparkSession, dir: String): Path = {
@@ -95,6 +88,60 @@ object IcebergCompat {
       require(vs.nonEmpty, s"no vN.metadata.json under $meta")
       new Path(meta, s"v${vs.max}.metadata.json")
     }
+  }
+
+  private def metadataRoot(spark: SparkSession,
+      dir: String): com.fasterxml.jackson.databind.JsonNode = {
+    val mf = currentMetadataFile(spark, dir)
+    val fs = fsFor(spark, dir)
+    require(fs.exists(mf), s"metadata file missing: $mf")
+    val in = fs.open(mf)
+    try mapper.readTree(in.readAllBytes()) finally in.close()
+  }
+
+  /** The current schema's JSON node (`current-schema-id` among
+    * `schemas`, else the first, else the v1 `schema` field). */
+  private def currentSchemaNode(root: com.fasterxml.jackson.databind.JsonNode)
+      : com.fasterxml.jackson.databind.JsonNode =
+    if (root.has("schemas")) {
+      val cur = root.path("current-schema-id").asLong(0L)
+      root.path("schemas").elements().asScala
+        .find(_.path("schema-id").asLong(-1L) == cur)
+        .getOrElse(root.path("schemas").elements().asScala.toSeq.headOption
+          .getOrElse(root.path("schema")))
+    } else root.path("schema")
+
+  /** Iceberg primitive type names and their Spark types (the open spec's
+    * vocabulary this reader and the writers here share). */
+  private val Primitives: Seq[(String, org.apache.spark.sql.types.DataType)] = {
+    import org.apache.spark.sql.types._
+    Seq("long" -> LongType, "int" -> IntegerType, "string" -> StringType,
+      "double" -> DoubleType, "float" -> FloatType, "boolean" -> BooleanType,
+      "binary" -> BinaryType, "date" -> DateType, "timestamptz" -> TimestampType)
+  }
+  private val DecimalName = """decimal\((\d+),\s*(\d+)\)""".r
+
+  /** The table's current schema as the Spark read schema — the shared
+    * scan's declared schema. None when the metadata lists no fields or a
+    * field's type is outside [[Primitives]] / decimals (nested types):
+    * the shared footer rule applies then. */
+  private[graft] def declaredSchema(spark: SparkSession,
+      dir: String): Option[org.apache.spark.sql.types.StructType] = {
+    val fields = currentSchemaNode(metadataRoot(spark, dir)).path("fields")
+      .elements().asScala.toSeq
+    val typed = fields.map { f =>
+      val t = f.path("type")
+      val dt =
+        if (!t.isTextual) None
+        else t.asText() match {
+          case DecimalName(p, sc) =>
+            Some(org.apache.spark.sql.types.DecimalType(p.toInt, sc.toInt))
+          case name => Primitives.find(_._1 == name).map(_._2)
+        }
+      dt.map(org.apache.spark.sql.types.StructField(f.path("name").asText(), _))
+    }
+    if (typed.isEmpty || typed.exists(_.isEmpty)) None
+    else Some(org.apache.spark.sql.types.StructType(typed.flatten))
   }
 
   private def readAvro(spark: SparkSession, path: Path): Seq[GenericRecord] = {
@@ -145,13 +192,8 @@ object IcebergCompat {
   /** The table's snapshot ids in metadata order (oldest first) — the
     * offset ladder for incremental/streaming consumption. */
   def snapshotIds(spark: SparkSession, dir: String): Seq[Long] = {
-    val fs = fsFor(spark, dir)
-    val mf = currentMetadataFile(spark, dir)
-    require(fs.exists(mf), s"metadata file missing: $mf")
-    val in = fs.open(mf)
-    val root = try mapper.readTree(in.readAllBytes()) finally in.close()
-    val snaps = root.path("snapshots")
-    require(snaps.isArray, s"no snapshots array in $mf")
+    val snaps = metadataRoot(spark, dir).path("snapshots")
+    require(snaps.isArray, s"no snapshots array in ${currentMetadataFile(spark, dir)}")
     (0 until snaps.size).map(i => snaps.get(i).path("snapshot-id").asLong(-1L))
   }
 
@@ -160,11 +202,8 @@ object IcebergCompat {
     * equality columns. */
   def resolveSnapshot(spark: SparkSession, dir: String,
       snapshotId: Option[Long] = None): Seq[ContentFile] = {
-    val fs = fsFor(spark, dir)
     val mf = currentMetadataFile(spark, dir)
-    require(fs.exists(mf), s"metadata file missing: $mf")
-    val in = fs.open(mf)
-    val root = try mapper.readTree(in.readAllBytes()) finally in.close()
+    val root = metadataRoot(spark, dir)
     val fv = root.path("format-version").asInt(1)
     require(fv <= 3, s"Iceberg format-version $fv is newer than this " +
       "compat reader's spec knowledge (v3) — refuse rather than mis-read")
@@ -173,14 +212,7 @@ object IcebergCompat {
     // its deletion vectors ARE applied (puffin blobs, below)
     // field-id -> name map from the current schema (for equality_ids)
     val idToName: Map[Long, String] = {
-      val schemaNode =
-        if (root.has("schemas")) {
-          val cur = root.path("current-schema-id").asLong(0L)
-          root.path("schemas").elements().asScala
-            .find(_.path("schema-id").asLong(-1L) == cur)
-            .getOrElse(root.path("schemas").elements().asScala.toSeq.headOption
-              .getOrElse(root.path("schema")))
-        } else root.path("schema")
+      val schemaNode = currentSchemaNode(root)
       if (schemaNode.has("fields"))
         schemaNode.path("fields").elements().asScala
           .map(f => f.path("id").asLong(-1L) -> f.path("name").asText(""))
@@ -261,9 +293,8 @@ object IcebergCompat {
 
   /** Read the table's current snapshot — or (`snapshotId`) any
     * snapshot still listed in the metadata file: TIME TRAVEL — with v2
-    * row-level deletes APPLIED. Delete sides broadcast (they are
-    * corrections, not corpora); the data side keeps its scan
-    * partitioning. */
+    * row-level deletes APPLIED through the shared scan, read with the
+    * table's current schema (footer rule when it declares none). */
   def readIcebergTable(spark: SparkSession, dir: String,
       snapshotId: Option[Long] = None): DataFrame = {
     val files = resolveSnapshot(spark, dir, snapshotId)
@@ -274,77 +305,40 @@ object IcebergCompat {
     val dvDel = files.filter(f => f.content == 1 && f.referencedDataFile.nonEmpty)
     val posDel = files.filter(f => f.content == 1 && f.referencedDataFile.isEmpty)
     val eqDel = files.filter(_.content == 2)
-    val plain = TableIO.readFilesFooter(spark, data.map(_.path))
-    if (dvDel.isEmpty && posDel.isEmpty && eqDel.isEmpty) return plain
-    import spark.implicits._
-    // per-data-file sequence numbers ride a broadcast map keyed by the
-    // normalized path — metadata-sized, like the delete sides
-    val seqDf = broadcast(data.map(f => (f.path, f.seq)).toDF("_gf_p", "_gf_seq")
-      .withColumn("_gf_p", normPath(col("_gf_p"))))
-    var df = plain
-      .withColumn("_gf_p", normPath(col("_metadata.file_path")))
-      .withColumn("_gf_pos", col("_metadata.row_index"))
-      .join(seqDf, Seq("_gf_p"), "left")
-    // DV target paths, normalized — a DV supersedes any position-delete
-    // FILES for its data file (the v3 rule: the vector must already
-    // contain all of their positions, so applying both would be
-    // redundant at best and the spec says ignore them)
+    // DV target paths — a DV supersedes any position-delete FILES for
+    // its data file (the v3 rule: the vector must already contain all of
+    // their positions, so applying both would be redundant at best and
+    // the spec says ignore them)
     val dvTargets: Seq[String] = dvDel.map(f =>
-      "/" + resolve(dir, f.referencedDataFile.get).toUri.getPath
-        .dropWhile(_ == '/'))
-    if (dvDel.nonEmpty) {
-      val fs = fsFor(spark, dir)
-      require(dvTargets.distinct.size == dvTargets.size,
-        s"multiple deletion vectors reference one data file at $dir — " +
-          "at most one DV per file (v3 rule)")
-      // blob parse is driver-side metadata (one DV is bounded by the
-      // rows of ONE file); the data plane sees only the anti-join
-      val rows: Seq[(String, Long, Long)] = dvDel.flatMap { f =>
+      resolve(dir, f.referencedDataFile.get).toUri.getPath)
+    require(dvTargets.distinct.size == dvTargets.size,
+      s"multiple deletion vectors reference one data file at $dir — " +
+        "at most one DV per file (v3 rule)")
+    // blob parse is driver-side metadata (one DV is bounded by the rows
+    // of ONE file); the data plane sees only the shared anti-join
+    val fs = fsFor(spark, dir)
+    val dvRows: Seq[(String, Long, Long)] = dvDel.zip(dvTargets).flatMap {
+      case (f, target) =>
         val off = f.contentOffset.getOrElse(throw new IllegalArgumentException(
           s"deletion vector ${f.path} has no content_offset"))
         val len = f.contentSize.getOrElse(throw new IllegalArgumentException(
           s"deletion vector ${f.path} has no content_size_in_bytes"))
-        val target = resolve(dir, f.referencedDataFile.get).toUri.getPath
-        Puffin.readDvBlob(fs, new Path(f.path), off, len)
-          .map(p => (target, p, f.seq))
-      }
-      val dv = broadcast(rows.toDF("_gv_target", "_gv_pos", "_gv_seq")
-        .withColumn("_gv_target", normPath(col("_gv_target"))))
-      df = df.join(dv,
-        df("_gf_p") === dv("_gv_target") && df("_gf_pos") === dv("_gv_pos") &&
-          dv("_gv_seq") >= df("_gf_seq"),
-        "left_anti")
+        Puffin.readDvBlob(fs, new Path(f.path), off, len).map(p => (target, p, f.seq))
     }
-    if (posDel.nonEmpty) {
-      // delete-file seq also rides _metadata provenance of the delete scan
-      val pdSeq = broadcast(posDel.map(f => (f.path, f.seq))
-        .toDF("_gd_p", "_gd_seq").withColumn("_gd_p", normPath(col("_gd_p"))))
-      val pd = broadcast(TableIO.readFilesFooter(spark, posDel.map(_.path))
-        .select(normPath(col("file_path")).as("_gd_target"),
-          col("pos").cast("long").as("_gd_pos"),
-          normPath(col("_metadata.file_path")).as("_gd_p"))
-        .join(pdSeq, Seq("_gd_p"))
-        .filter(if (dvTargets.isEmpty) lit(true)
-          else !col("_gd_target").isin(dvTargets: _*)))
-      df = df.join(pd,
-        df("_gf_p") === pd("_gd_target") && df("_gf_pos") === pd("_gd_pos") &&
-          pd("_gd_seq") >= df("_gf_seq"),
-        "left_anti")
+    // position-delete targets are raw locations, as are the DV targets
+    val posFiles = posDel.groupBy(_.seq).toSeq.sortBy(_._1).map { case (seq, g) =>
+      ParquetScan.readFiles(spark, g.map(_.path))
+        .select(col("file_path").as("file"), col("pos"), lit(seq).as("seq"))
+        .filter(!ParquetScan.location(col("file")).isin(dvTargets: _*))
     }
-    eqDel.groupBy(_.equalityNames).foreach { case (names, group) =>
-      require(names.nonEmpty, "equality delete with empty column list")
-      val edSeq = broadcast(group.map(f => (f.path, f.seq))
-        .toDF("_ge_p", "_ge_seq").withColumn("_ge_p", normPath(col("_ge_p"))))
-      val ed = broadcast(TableIO.readFilesFooter(spark, group.map(_.path))
-        .withColumn("_ge_p", normPath(col("_metadata.file_path")))
-        .join(edSeq, Seq("_ge_p"))
-        .select(col("_ge_seq") +: names.map(n => col(n).as(s"_ge_$n")): _*))
-      // STRICT seq rule: a row re-inserted after the delete survives
-      val cond = names.map(n => df(n) <=> ed(s"_ge_$n"))
-        .reduce(_ && _) && ed("_ge_seq") > df("_gf_seq")
-      df = df.join(ed, cond, "left_anti")
-    }
-    df.drop("_gf_p", "_gf_pos", "_gf_seq")
+    // position deletes apply at deleteSeq >= dataSeq; equality deletes at
+    // the STRICT deleteSeq > dataSeq (a row re-inserted after survives)
+    ParquetScan.readFiles(spark, data.map(_.path), declaredSchema(spark, dir),
+      dvRows, posFiles.reduceOption(_ unionByName _),
+      eqDel.groupBy(_.equalityNames).toSeq.map { case (names, group) =>
+        ParquetScan.EqualityDeletes(names, group.map(f => (f.path, f.seq)))
+      },
+      fileSeqs = data.map(f => (f.path, f.seq)))
   }
 
   /** INCREMENTAL PULL between two snapshots: the data files present in
@@ -381,28 +375,19 @@ object IcebergCompat {
     val files = addedBetween(spark, dir, fromSnapshotId, toSnapshotId)
     require(files.nonEmpty,
       s"no files added in ($fromSnapshotId -> $toSnapshotId] at $dir")
-    TableIO.readFilesFooter(spark, files)
+    ParquetScan.readFiles(spark, files, declaredSchema(spark, dir))
   }
 
   /** Spark type → Iceberg primitive type name (the open spec's
     * vocabulary); out-of-vocabulary types refuse loudly. */
-  private def icebergTypeOf(dt: org.apache.spark.sql.types.DataType): String = {
-    import org.apache.spark.sql.types._
+  private def icebergTypeOf(dt: org.apache.spark.sql.types.DataType): String =
     dt match {
-      case LongType => "long"
-      case IntegerType => "int"
-      case StringType => "string"
-      case DoubleType => "double"
-      case FloatType => "float"
-      case BooleanType => "boolean"
-      case BinaryType => "binary"
-      case DateType => "date"
-      case TimestampType => "timestamptz"
-      case d: DecimalType => s"decimal(${d.precision}, ${d.scale})"
-      case other => throw new IllegalArgumentException(
-        s"no Iceberg mapping for Spark type ${other.simpleString}")
+      case d: org.apache.spark.sql.types.DecimalType =>
+        s"decimal(${d.precision}, ${d.scale})"
+      case other => Primitives.find(_._2 == other).map(_._1).getOrElse(
+        throw new IllegalArgumentException(
+          s"no Iceberg mapping for Spark type ${other.simpleString}"))
     }
-  }
 
   /** Write `df` as parquet data files under `dir`/data, returning each
     * file's (table-relative path, true row count from its footer) —
@@ -411,7 +396,6 @@ object IcebergCompat {
       tag: String): Seq[(String, Long)] = {
     val spark = df.sparkSession
     val fs = fsFor(spark, dir)
-    val conf = spark.sparkContext.hadoopConfiguration
     val tmp = s"$dir/.tmp-$tag"
     df.write.mode("overwrite").parquet(tmp)
     val parts = fs.listStatus(new Path(tmp)).map(_.getPath)
@@ -421,11 +405,7 @@ object IcebergCompat {
       val rel = f"data/$tag-$i%05d.parquet"
       fs.mkdirs(new Path(s"$dir/data"))
       require(fs.rename(p, new Path(s"$dir/$rel")), s"rename failed: $p")
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(s"$dir/$rel"), conf))
-      val rows = try reader.getRecordCount finally reader.close()
-      (rel, rows)
+      (rel, ParquetScan.rowCount(spark, s"$dir/$rel"))
     }
     fs.delete(new Path(tmp), true)
     out.toSeq
@@ -476,18 +456,11 @@ object IcebergCompat {
     val spark = df.sparkSession
     val fs = fsFor(spark, dir)
     val mf = currentMetadataFile(spark, dir)
-    val in = fs.open(mf)
-    val root = try mapper.readTree(in.readAllBytes()) finally in.close()
+    val root = metadataRoot(spark, dir)
     val snaps = root.path("snapshots")
     require(snaps.isArray && snaps.size > 0, s"no snapshots at $dir")
-    val schemaNames = {
-      val cur = root.path("current-schema-id").asLong(0L)
-      val schemaNode = root.path("schemas").elements().asScala
-        .find(_.path("schema-id").asLong(-1L) == cur)
-        .getOrElse(root.path("schema"))
-      schemaNode.path("fields").elements().asScala
-        .map(_.path("name").asText("")).toSeq
-    }
+    val schemaNames = currentSchemaNode(root).path("fields").elements().asScala
+      .map(_.path("name").asText("")).toSeq
     if (schemaNames.nonEmpty)
       require(df.columns.sorted.toSeq == schemaNames.sorted,
         s"append schema (${df.columns.sorted.mkString(", ")}) != table " +
@@ -541,9 +514,7 @@ object IcebergCompat {
       keep: Seq[Long]): Seq[String] = {
     val fs = fsFor(spark, dir)
     val mf = currentMetadataFile(spark, dir)
-    require(fs.exists(mf), s"metadata file missing: $mf")
-    val in = fs.open(mf)
-    val root = try mapper.readTree(in.readAllBytes()) finally in.close()
+    val root = metadataRoot(spark, dir)
     val current = root.path("current-snapshot-id").asLong(-1L)
     require(keep.contains(current),
       s"the current snapshot $current must be kept")
@@ -712,28 +683,16 @@ object IcebergCompat {
     val fs = fsFor(spark, snapshotRoot)
     val ids = SnapshotTable.snapshots(spark, snapshotRoot)
     require(ids.nonEmpty, s"no committed snapshot at $snapshotRoot")
-    def filesOf(dir: String): Seq[(String, Long)] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      val conf = spark.sparkContext.hadoopConfiguration
-      def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) {
-          val full = st.getPath.toUri.getPath
-          val root = fs.makeQualified(new Path(snapshotRoot)).toUri.getPath
-          // record_count is a REQUIRED, trusted manifest field: real
-          // Iceberg engines answer count(*) and plan scans from it
-          // without touching data, so it must be the file's true row
-          // count — the parquet footer has it for the price of a
-          // metadata read, no data pages touched
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, conf))
-          val rows = try reader.getRecordCount finally reader.close()
-          out += ((full.stripPrefix(root + "/"), rows))
-        }
+    val root = fs.makeQualified(new Path(snapshotRoot)).toUri.getPath
+    // record_count is a REQUIRED, trusted manifest field: real Iceberg
+    // engines answer count(*) and plan scans from it without touching
+    // data, so it must be the file's true row count — the parquet footer
+    // has it for the price of a metadata read, no data pages touched
+    def filesOf(dir: String): Seq[(String, Long)] =
+      ParquetScan.parquetFiles(fs, new Path(snapshotRoot, dir)).map { st =>
+        (st.getPath.toUri.getPath.stripPrefix(root + "/"),
+          ParquetScan.rowCount(spark, st.getPath.toString))
       }
-      walk(new Path(snapshotRoot, dir))
-      out.toSeq.sortBy(_._1)
-    }
     fs.delete(new Path(s"$snapshotRoot/metadata"), true) // re-export replaces
     val snapshots = ids.zipWithIndex.map { case (id, idx) =>
       val dirs = SnapshotTable.dirsAt(spark, snapshotRoot, id)
@@ -753,8 +712,11 @@ object IcebergCompat {
   }
 
   /** Fixture: write `vN.metadata.json` + `version-hint.text` with a
-    * snapshot per (id, manifestList), current = the last; `schemaFields`
-    * (id, name) feed equality_ids resolution. */
+    * snapshot per (id, manifestList), current = the last. With
+    * `schemaFields` (id, name — feeding equality_ids resolution) the
+    * current schema lists EVERY column, as a real writer's does: typed
+    * from the footers of the current snapshot's data files, the named
+    * columns under their given ids, the rest numbered after them. */
   def writeMetadata(spark: SparkSession, dir: String, version: Int,
       snapshots: Seq[(Long, String)],
       schemaFields: Seq[(Int, String)] = Nil,
@@ -764,9 +726,28 @@ object IcebergCompat {
     val snapsJson = snapshots.map { case (id, ml) =>
       s"""{"snapshot-id":$id,"manifest-list":"$ml"}"""
     }.mkString("[", ",", "]")
-    val fieldsJson = schemaFields.map { case (id, n) =>
-      s"""{"id":$id,"name":"$n","required":false,"type":"long"}"""
-    }.mkString("[", ",", "]")
+    val dataFiles =
+      if (schemaFields.isEmpty) Nil
+      else readAvro(spark, resolve(dir, snapshots.last._2)).flatMap { me =>
+        readAvro(spark, resolve(dir, field(me, "manifest_path").get.toString))
+      }.flatMap { e =>
+        field(e, "data_file").collect {
+          case df: GenericRecord if longField(e, "status").getOrElse(0L) != 2L &&
+              longField(df, "content").getOrElse(0L) == 0L =>
+            resolve(dir, field(df, "file_path").get.toString).toString
+        }
+      }
+    val named = schemaFields.map(_.swap).toMap
+    val typed = if (dataFiles.isEmpty) Nil
+      else ParquetScan.readSchema(spark, dataFiles).fields.toSeq
+    val fresh = Iterator.from((0 +: schemaFields.map(_._1)).max + 1)
+    val fieldsJson = (typed.map(f =>
+        (named.getOrElse(f.name, fresh.next()), f.name, icebergTypeOf(f.dataType))) ++
+      schemaFields.filterNot(f => typed.exists(_.name == f._2))
+        .map { case (id, n) => (id, n, "long") })
+      .map { case (id, n, t) =>
+        s"""{"id":$id,"name":"$n","required":false,"type":"$t"}"""
+      }.mkString("[", ",", "]")
     val json =
       s"""{"format-version":$formatVersion,"table-uuid":"graft-fixture",
          |"current-snapshot-id":${snapshots.last._1},

@@ -193,77 +193,6 @@ object SnapshotTable {
     (next, snapDir)
   }
 
-  /** All parquet files under `dir`, RECURSIVELY — hive-partitioned data
-    * dirs nest their files one level per partition column. */
-  private def listParquetFiles(fs: FileSystem,
-      dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.FileStatus]
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else if (st.getPath.getName.endsWith(".parquet")) out += st
-    }
-    walk(dir)
-    out.toSeq
-  }
-
-  /** A data dir written with a partition spec has `col=value` subdirs. */
-  private def isHivePartitioned(fs: FileSystem, dir: Path): Boolean =
-    fs.listStatus(dir).exists(st =>
-      st.isDirectory && st.getPath.getName.contains("="))
-
-  /** Declared schema of an engine-written dir from ONE part footer, read
-    * on the DRIVER — `spark.read.parquet(dir)` without a schema launches
-    * a Spark schema-INFERENCE job per call, and the snapshot layer reads
-    * dirs once per consumer (MOR scans, delete grouping, audits). Each
-    * dir is a single commit's write: uniform schema by construction —
-    * the same single-footer answer inference gives with mergeSchema off.
-    * Not applicable to hive-partitioned dirs (partition discovery
-    * synthesizes the partition columns) or mergeSchema reads. */
-  private def dirFooterSchema(spark: SparkSession, fs: FileSystem,
-      dir: Path): org.apache.spark.sql.types.StructType = {
-    val files = listParquetFiles(fs, dir)
-    require(files.nonEmpty, s"no parquet files under $dir")
-    org.apache.spark.sql.graftbridge.Bridge.parquetFooterSchema(spark,
-      files.minBy(_.getPath.toString).getPath.toString)
-  }
-
-  /** Flat (non-hive, non-mergeSchema) dir read with the footer schema —
-    * zero inference jobs. */
-  private def readFlatDirs(spark: SparkSession, fs: FileSystem,
-      dirs: Seq[Path]): DataFrame =
-    spark.read.schema(dirFooterSchema(spark, fs, dirs.head))
-      .parquet(dirs.map(_.toString): _*)
-
-  /** Read a set of data dirs as one DataFrame, honoring PARTITION
-    * EVOLUTION: dirs written under different partition specs (flat,
-    * partitioned-by-X, partitioned-by-Y) cannot share one multi-path
-    * scan (partition discovery needs a common layout), so any mixed set
-    * reads per-dir and unions BY NAME — a hive dir surfaces its
-    * partition values as columns, a flat dir has them as data columns,
-    * and the union reconciles order. Homogeneous flat sets keep the
-    * single multi-path scan. Filters on a partition column prune
-    * directories inside each hive dir (PartitionFilters — pinned in
-    * SnapshotTableSpec) and push down as row-group filters in flat
-    * dirs: each dir is pruned as well as ITS spec allows, the Iceberg
-    * per-spec contract. */
-  private def readDirs(spark: SparkSession, rootPath: Path, dirs: Seq[String],
-      mergeSchema: Boolean): DataFrame = {
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val reader =
-      if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
-    val anyHive = dirs.exists(d => isHivePartitioned(fs, new Path(rootPath, d)))
-    if (!anyHive && !mergeSchema)
-      readFlatDirs(spark, fs, dirs.map(d => new Path(rootPath, d)))
-    else if (!anyHive)
-      reader.parquet(dirs.map(d => new Path(rootPath, d).toString): _*)
-    else dirs.map { d =>
-      val p = new Path(rootPath, d)
-      if (!mergeSchema && !isHivePartitioned(fs, p)) readFlatDirs(spark, fs, Seq(p))
-      else reader.parquet(p.toString)
-    }.reduce((a, b) => a.unionByName(b, allowMissingColumns = mergeSchema))
-  }
-
   /** The commit point: write the manifest body to a dot-temp (hidden
     * from parquet listings), rename to `_manifest-N` — one metadata op
     * creating a NEW name, never touching the live pointer set. */
@@ -322,7 +251,7 @@ object SnapshotTable {
     * engine-replayable — no RNG, no implementation-defined hash. */
   private def writeKmvSidecar(spark: SparkSession, fs: FileSystem,
       snapPath: Path, cols: Seq[String]): Unit = {
-    val df = spark.read.parquet(snapPath.toString)
+    val df = ParquetScan.readPath(spark, snapPath.toString)
     val lines = cols.map { c =>
       val hs = df.filter(col(c).isNotNull)
         .select(org.apache.spark.sql.functions.conv(
@@ -433,7 +362,7 @@ object SnapshotTable {
   def bloomColumns(spark: SparkSession, root: String, id: Long): Seq[String] = {
     val (fs, rootPath) = fsFor(spark, root)
     val dir = readManifest(fs, rootPath, id).filterNot(isDeleteDir).head
-    val file = listParquetFiles(fs, new Path(rootPath, dir)).head
+    val file = ParquetScan.parquetFiles(fs, new Path(rootPath, dir)).head
     val hconf = spark.sparkContext.hadoopConfiguration
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, hconf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -470,7 +399,7 @@ object SnapshotTable {
         .map(_.trim).filter(_.nonEmpty).map(_.split("\t"))
         .filter(p => p.length == 4 && p(1) == column)
         .map(p => p(0) -> (p(2).toDouble, p(3).toDouble)).toMap
-      val files = listParquetFiles(fs, dirPath).map(_.getPath.getName)
+      val files = ParquetScan.parquetFiles(fs, dirPath).map(_.getPath.getName)
       val uncovered = files.filterNot(ranges.contains)
       require(uncovered.isEmpty,
         s"dir $d has files without $column stats (${uncovered.take(3)}) — " +
@@ -495,13 +424,7 @@ object SnapshotTable {
     require(!dirs.exists(isDeleteDir),
       s"metadataCount is undefined under pending equality deletes at $root " +
         "— compact() to materialize them first")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    dirs.iterator.flatMap(d =>
-      listParquetFiles(fs, new Path(rootPath, d)).iterator).map { st =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
+    dirs.iterator.map(d => rowsUnder(spark, fs, new Path(rootPath, d))).sum
   }
 
   /** PARTITION EVOLUTION append: write the delta hive-partitioned by
@@ -509,7 +432,7 @@ object SnapshotTable {
     * written under (flat, or partitioned by different columns) — the
     * table's partition spec evolves WITHOUT rewriting history, exactly
     * Iceberg's contract. Reads reconcile the specs by name (see
-    * [[readDirs]]); a filter on the partition column directory-prunes
+    * [[readSnapshotDirs]]); a filter on the partition column directory-prunes
     * the new dirs and row-group-prunes the old — each generation is
     * pruned as well as its own layout allows. At 100 TB this is the
     * "we should have partitioned by day" migration executed as one
@@ -552,7 +475,7 @@ object SnapshotTable {
     val spark = df.sparkSession
     val (fs, rootPath) = fsFor(spark, root)
     val (next, snapDir) = writeDataDir(df, root, statsCols)
-    val staged = spark.read.parquet(new Path(rootPath, snapDir).toString)
+    val staged = ParquetScan.readPath(spark, new Path(rootPath, snapDir).toString)
     // ONE audit job over the staged files: when both constraint kinds are
     // present, per-key group sizes and per-column null counts ride the
     // same two-level aggregate (sum of per-group null counts == total
@@ -595,7 +518,7 @@ object SnapshotTable {
     * equality-delete dir holding the batch's keys and a data dir
     * holding the batch's rows. Both carry the same sequence, so the
     * delete masks matching rows in every OLDER dir but never the batch
-    * itself ([[applyDeletes]] requires `dseq > seq` strictly) — updated
+    * itself (equality deletes need `dseq > seq` strictly) — updated
     * keys are replaced, new keys are inserted, and readers see either
     * the whole batch or none of it (the manifest flip is the only
     * publish point). Cost is O(batch): nothing existing is rewritten,
@@ -606,8 +529,8 @@ object SnapshotTable {
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     val spark = df.sparkSession
     val (fs, rootPath) = fsFor(spark, root)
-    require(!df.columns.exists(c => c == SeqCol || c == DelSeqCol),
-      s"$SeqCol/$DelSeqCol are reserved by the snapshot layer")
+    require(!df.columns.contains(SeqCol),
+      s"$SeqCol is reserved by the snapshot layer")
     val cur = currentSnapshot(spark, root)
     val prior = readManifest(fs, rootPath, cur)
     val next = cur + 1
@@ -642,19 +565,12 @@ object SnapshotTable {
     require(!dirs.exists(isDeleteDir),
       s"compactSmall is undefined under pending equality deletes at $root " +
         "— run compact() to materialize them first")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def rowsOf(d: String): Long =
-      listParquetFiles(fs, new Path(rootPath, d)).iterator.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
-    val counted = dirs.map(d => d -> rowsOf(d))
+    val counted = dirs.map(d => d -> rowsUnder(spark, fs, new Path(rootPath, d)))
     val (small, big) = counted.partition(_._2 <= smallMaxRows)
     if (small.size < 2) return cur
     val n = small.map(_._2).sum
     val files = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt
-    val merged = readDirs(spark, rootPath, small.map(_._1), mergeSchema = false)
+    val merged = readSnapshotDirs(spark, rootPath, small.map(_._1))
       .repartition(files)
     val (next, snapDir) = writeDataDir(merged, root, statsCols)
     commitManifest(spark, root, next, big.map(_._1) :+ snapDir)
@@ -812,14 +728,12 @@ object SnapshotTable {
 
   /** Read the current snapshot. No retry wrapper needed: the manifest
     * resolves to immutable directories that survive any concurrent
-    * commit (until vacuumed past retention). `mergeSchema` unions the
-    * footer schemas across the chain's dirs — the schema-evolution
-    * read for append chains whose later batches added columns (older
-    * rows surface NULL there, parquet's standard evolution contract);
-    * off by default because footer merging costs an O(files) driver
-    * pass a fixed-schema table never needs. */
-  def read(spark: SparkSession, root: String, mergeSchema: Boolean = false): DataFrame =
-    readAt(spark, root, currentSnapshot(spark, root), mergeSchema)
+    * commit (until vacuumed past retention). The read schema is the
+    * union of every dir's schema, so an append chain whose later batches
+    * added columns surfaces them (older rows NULL there, parquet's
+    * standard evolution contract). */
+  def read(spark: SparkSession, root: String): DataFrame =
+    readAt(spark, root, currentSnapshot(spark, root))
 
   /** Time travel: read snapshot `id` (must still be retained). When the
     * manifest lists delete dirs (see [[deleteKeys]]) the scan is a
@@ -827,69 +741,81 @@ object SnapshotTable {
     * every equality-delete set masks the rows of STRICTLY OLDER data
     * dirs via one null-safe anti join — a row re-inserted after a
     * delete survives, exactly Iceberg's equality-delete sequencing. */
-  def readAt(spark: SparkSession, root: String, id: Long,
-      mergeSchema: Boolean = false): DataFrame = {
+  def readAt(spark: SparkSession, root: String, id: Long): DataFrame = {
     val (fs, rootPath) = fsFor(spark, root)
-    readSnapshotDirs(spark, rootPath, readManifest(fs, rootPath, id), mergeSchema)
+    readSnapshotDirs(spark, rootPath, readManifest(fs, rootPath, id))
   }
 
-  /** Deletes-aware scan of one manifest's dir list, names resolved
-    * against `rootPath` (shared by [[readAt]] and [[branchRead]]). */
+  /** Read a manifest's dir list as one DataFrame — the snapshot
+    * layer's only scan, shared by [[readAt]], [[branchRead]],
+    * [[appendedBetween]] and [[compactSmall]]:
+    *  - flat dirs read through [[ParquetScan]] with ONE read schema, the
+    *    footer rule over the flat dirs (no inference job); without hive
+    *    dirs or deletes that is a single multi-dir scan;
+    *  - PARTITION EVOLUTION: dirs written under different partition
+    *    specs (flat, partitioned-by-X, partitioned-by-Y) cannot share one
+    *    multi-path scan (partition discovery needs a common layout), so
+    *    any mixed set reads per dir and unions BY NAME — a hive dir
+    *    surfaces its partition values as columns, a flat dir has them as
+    *    data columns. A hive dir merges all its footers (Spark's
+    *    `mergeSchema`), and a column some dirs lack is NULL in them.
+    *    Filters on a partition column prune directories inside each hive
+    *    dir (PartitionFilters — pinned in SnapshotTableSpec) and push
+    *    down as row-group filters in flat dirs: each dir is pruned as
+    *    well as ITS spec allows, the Iceberg per-spec contract;
+    *  - MERGE-ON-READ: with delete dirs listed, every data row carries
+    *    its dir's commit sequence and the shared equality-delete mask
+    *    drops the rows a STRICTLY younger delete matches (a row
+    *    re-inserted after a delete survives). */
   private def readSnapshotDirs(spark: SparkSession, rootPath: Path,
-      dirs: Seq[String], mergeSchema: Boolean): DataFrame = {
-    val (delDirs, dataDirs) = dirs.partition(isDeleteDir)
+      dirs: Seq[String]): DataFrame = {
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val reader =
-      if (mergeSchema) spark.read.option("mergeSchema", "true") else spark.read
-    if (delDirs.isEmpty)
-      readDirs(spark, rootPath, dataDirs, mergeSchema)
-    else {
-      val data = dataDirs.map { dn =>
-        val p = new Path(rootPath, dn)
-        val base =
-          if (!mergeSchema && !isHivePartitioned(fs, p))
-            readFlatDirs(spark, fs, Seq(p))
-          else reader.parquet(p.toString)
-        base.withColumn(SeqCol, lit(seqOf(dn)))
-      }.reduce((a, b) => a.unionByName(b, allowMissingColumns = mergeSchema))
-      applyDeletes(spark, rootPath, delDirs, data).drop(SeqCol)
-    }
+    val (delDirs, dataDirs) = dirs.partition(isDeleteDir)
+    val paths = dataDirs.map(d => new Path(rootPath, d))
+    val hive = paths.filter(ParquetScan.isHivePartitioned(fs, _)).toSet
+    lazy val flatSchema = Some(dirsReadSchema(spark, fs, paths.filterNot(hive)))
+    if (hive.isEmpty && delDirs.isEmpty)
+      return ParquetScan.readDirs(spark, paths.map(_.toString), flatSchema)
+    val data = dataDirs.zip(paths).map { case (d, p) =>
+      val df =
+        if (hive(p)) spark.read.option("mergeSchema", "true").parquet(p.toString)
+        else ParquetScan.readDirs(spark, Seq(p.toString), flatSchema)
+      if (delDirs.isEmpty) df else df.withColumn(SeqCol, lit(seqOf(d)))
+    }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+    if (delDirs.isEmpty) data
+    else ParquetScan.withoutKeys(data, SeqCol,
+      equalityDeletes(spark, fs, rootPath, delDirs)).drop(SeqCol)
   }
+
+  /** Rows under a data dir, summed from its parquet footers. */
+  private def rowsUnder(spark: SparkSession, fs: FileSystem, dir: Path): Long =
+    ParquetScan.parquetFiles(fs, dir).iterator
+      .map(st => ParquetScan.rowCount(spark, st.getPath.toString)).sum
+
+  /** The shared footer rule over flat `dirs`, one footer per dir: a
+    * dir is one Spark write, whose files share one schema. */
+  private def dirsReadSchema(spark: SparkSession, fs: FileSystem,
+      dirs: Seq[Path]): org.apache.spark.sql.types.StructType =
+    ParquetScan.readSchema(spark,
+      dirs.flatMap(ParquetScan.parquetFiles(fs, _).headOption).map(_.getPath.toString))
 
   /** Internal column carrying a data row's commit sequence during a
     * merge-on-read scan (dropped before the result surfaces). */
   private val SeqCol = "__graft_seq"
-  private val DelSeqCol = "__graft_dseq"
 
-  /** Mask `data` (which carries [[SeqCol]]) with every equality-delete
-    * dir in `delDirs`: one left_anti join per distinct delete-key
-    * schema, each null-safe on the keys and restricted to deletes
-    * YOUNGER than the data row's dir (`dseq > seq`). Delete sets are
-    * deltas — tiny next to the table — so AQE plans these as broadcast
-    * anti joins; the data side is never shuffled. */
-  private def applyDeletes(spark: SparkSession, rootPath: Path,
-      delDirs: Seq[String], data: DataFrame): DataFrame = {
-    require(!data.columns.contains(DelSeqCol),
-      s"column name $DelSeqCol is reserved by the snapshot layer")
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // delete dirs are flat engine-written key sets: footer reads (no
-    // inference job) both for the key-schema grouping and the scans
-    val byKeySchema: Seq[(Seq[String], Seq[String])] = delDirs
-      .groupBy(dn => dirFooterSchema(spark, fs, new Path(rootPath, dn))
-        .fieldNames.sorted.toSeq)
-      .toSeq.sortBy(_._1.mkString(","))
-    byKeySchema.foldLeft(data) { case (acc, (keyCols, dns)) =>
-      val dels = dns.map { dn =>
-        readFlatDirs(spark, fs, Seq(new Path(rootPath, dn)))
-          .withColumn(DelSeqCol, lit(seqOf(dn)))
-      }.reduce(_ unionByName _)
-      val d = acc.as("d")
-      val x = dels.as("x")
-      val cond = keyCols.map(k => col(s"d.`$k`") <=> col(s"x.`$k`"))
-        .reduce(_ && _) && col(s"x.`$DelSeqCol`") > col(s"d.`$SeqCol`")
-      d.join(x, cond, "left_anti")
+  /** The manifest's equality-delete dirs as the shared scan's equality
+    * deletes: grouped by delete-key column set (each dir's footer), every
+    * file at its dir's commit sequence. */
+  private def equalityDeletes(spark: SparkSession, fs: FileSystem,
+      rootPath: Path, delDirs: Seq[String]): Seq[ParquetScan.EqualityDeletes] =
+    delDirs.map { dn =>
+      (dn, ParquetScan.parquetFiles(fs, new Path(rootPath, dn)).map(_.getPath.toString))
+    }.groupBy { case (_, files) =>
+      ParquetScan.readSchema(spark, files.take(1)).fieldNames.sorted.toSeq
+    }.toSeq.sortBy(_._1.mkString(",")).map { case (keys, group) =>
+      ParquetScan.EqualityDeletes(keys,
+        group.flatMap { case (dn, files) => files.map(_ -> seqOf(dn)) })
     }
-  }
 
   /** MERGE-ON-READ equality DELETE: write ONLY the key rows matching
     * `predicate` (projected to `keyCols`) into a fresh delete dir and
@@ -918,8 +844,8 @@ object SnapshotTable {
   def deleteKeys(keys: DataFrame, root: String): Long = {
     val spark = keys.sparkSession
     val (fs, rootPath) = fsFor(spark, root)
-    require(!keys.columns.exists(c => c == SeqCol || c == DelSeqCol),
-      s"$SeqCol/$DelSeqCol are reserved by the snapshot layer")
+    require(!keys.columns.contains(SeqCol),
+      s"$SeqCol is reserved by the snapshot layer")
     val prior = readManifest(fs, rootPath, currentSnapshot(spark, root))
     val next = currentSnapshot(spark, root) + 1
     val delDir = DelPrefix + fmt(next)
@@ -992,13 +918,12 @@ object SnapshotTable {
     * before `tsMillis` (the "what did the table say when the report
     * ran" read). Throws if the table has no snapshot that old —
     * distinguishable from an empty table. */
-  def readAsOf(spark: SparkSession, root: String, tsMillis: Long,
-      mergeSchema: Boolean = false): DataFrame = {
+  def readAsOf(spark: SparkSession, root: String, tsMillis: Long): DataFrame = {
     val at = commitTimes(spark, root).filter(_._2 <= tsMillis)
     require(at.nonEmpty,
       s"no snapshot at or before $tsMillis at $root (retention may have " +
         "reclaimed it)")
-    readAt(spark, root, at.maxBy(t => (t._2, t._1))._1, mergeSchema)
+    readAt(spark, root, at.maxBy(t => (t._2, t._1))._1)
   }
 
   /** O(delta) CDC over an append-only chain: the rows added between
@@ -1020,7 +945,7 @@ object SnapshotTable {
       s"snapshots $fromId..$toId include an equality delete at $root — " +
         "the window is not append-only, use diff() instead")
     if (delta.isEmpty) readAt(spark, root, toId).limit(0)
-    else readDirs(spark, rootPath, delta, mergeSchema = false)
+    else readSnapshotDirs(spark, rootPath, delta)
   }
 
   /** General row-level CDC between two retained snapshots: one
@@ -1064,7 +989,7 @@ object SnapshotTable {
   def schemaDrift(spark: SparkSession, root: String, fromId: Long,
       toId: Long): DataFrame = {
     def types(id: Long): Map[String, String] =
-      readAt(spark, root, id, mergeSchema = true).schema
+      readAt(spark, root, id).schema
         .map(f => f.name -> f.dataType.simpleString).toMap
     val (from, to) = (types(fromId), types(toId))
     val rows =
@@ -1089,7 +1014,7 @@ object SnapshotTable {
     val hconf = spark.sparkContext.hadoopConfiguration
     val wanted = statsCols.toSet
     val lines = new scala.collection.mutable.ArrayBuffer[String]
-    listParquetFiles(fs, snapPath)
+    ParquetScan.parquetFiles(fs, snapPath)
       .foreach { st =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -1148,7 +1073,7 @@ object SnapshotTable {
     val (fs, rootPath) = fsFor(spark, root)
     val dirs = readManifest(fs, rootPath, currentSnapshot(spark, root))
       .filterNot(isDeleteDir)
-    dirs.foreach(d => require(!isHivePartitioned(fs, new Path(rootPath, d)),
+    dirs.foreach(d => require(!ParquetScan.isHivePartitioned(fs, new Path(rootPath, d)),
       s"stats pruning reads raw file paths, which would drop $d's hive " +
         "partition columns — compact() the table to a flat layout first"))
     var total = 0
@@ -1163,7 +1088,7 @@ object SnapshotTable {
           .filter(p => p.length == 4 && p(1) == column)
           .map(p => p(0) -> (p(2).toDouble, p(3).toDouble))
           .toMap
-      d -> listParquetFiles(fs, dirPath)
+      d -> ParquetScan.parquetFiles(fs, dirPath)
         .flatMap { st =>
           total += 1
           ranges.get(st.getPath.getName) match {
@@ -1190,18 +1115,23 @@ object SnapshotTable {
       val (fs, rootPath) = fsFor(spark, root)
       val delDirs = readManifest(fs, rootPath, currentSnapshot(spark, root))
         .filter(isDeleteDir)
-      if (delDirs.isEmpty)
-        graft.sources.TableIO.readFilesFooter(spark, selected.flatMap(_._2)).filter(pred)
-      else {
-        // merge-on-read pruned scan: the per-dir grouping keeps each
-        // file's commit sequence so pending deletes mask exactly the
-        // rows they would on the full scan
-        val data = selected.map { case (dn, files) =>
-          graft.sources.TableIO.readFilesFooter(spark, files)
-            .withColumn(SeqCol, lit(seqOf(dn)))
-        }.reduce(_ unionByName _)
-        applyDeletes(spark, rootPath, delDirs, data).drop(SeqCol).filter(pred)
-      }
+      // the SNAPSHOT's read schema, not the pruned subset's: a pruned
+      // scan surfaces the same columns as the full read
+      val schema = Some(dirsReadSchema(spark, fs,
+        byDir.map(d => new Path(rootPath, d._1))))
+      val data =
+        if (delDirs.isEmpty)
+          ParquetScan.readFiles(spark, selected.flatMap(_._2), schema)
+        else
+          // merge-on-read pruned scan: the per-dir grouping keeps each
+          // file's commit sequence so pending deletes mask exactly the
+          // rows they would on the full scan
+          ParquetScan.withoutKeys(selected.map { case (dn, files) =>
+            ParquetScan.readFiles(spark, files, schema)
+              .withColumn(SeqCol, lit(seqOf(dn)))
+          }.reduce(_ unionByName _), SeqCol,
+            equalityDeletes(spark, fs, rootPath, delDirs)).drop(SeqCol)
+      data.filter(pred)
     }
   }
 
@@ -1226,7 +1156,6 @@ object SnapshotTable {
     // equality deletes pending, footers overcount the masked rows —
     // compaction MATERIALIZES the deletes (the merge-on-read →
     // copy-on-write transition), so the live count needs the MOR scan.
-    val hconf = spark.sparkContext.hadoopConfiguration
     if (delDirs.nonEmpty) {
       // The merge-on-read scan runs ONCE: the deletes-applied relation is
       // persisted (DISK_ONLY — cluster-safe, rebuilds from lineage on
@@ -1242,13 +1171,7 @@ object SnapshotTable {
         commit(live.repartition(files), root, statsCols)
       } finally live.unpersist(blocking = false)
     } else {
-      val n = dataDirs.iterator.flatMap { d =>
-        listParquetFiles(fs, new Path(rootPath, d)).iterator
-      }.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+      val n = dataDirs.iterator.map(d => rowsUnder(spark, fs, new Path(rootPath, d))).sum
       val files = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt
       commit(readAt(spark, root, cur).repartition(files), root, statsCols)
     }
@@ -1428,14 +1351,13 @@ object SnapshotTable {
 
   /** Read a branch's current state (deletes-aware, data resolved
     * against the main root's dir pool). */
-  def branchRead(spark: SparkSession, root: String, name: String,
-      mergeSchema: Boolean = false): DataFrame = {
+  def branchRead(spark: SparkSession, root: String, name: String): DataFrame = {
     val (_, rootPath) = fsFor(spark, root)
     val bRoot = branchRoot(root, name)
     val bPath = new Path(bRoot)
     val (bfs, _) = fsFor(spark, bRoot)
     val dirs = readManifest(bfs, bPath, currentSnapshot(spark, bRoot))
-    readSnapshotDirs(spark, rootPath, dirs, mergeSchema)
+    readSnapshotDirs(spark, rootPath, dirs)
   }
 
   /** MERGE a branch's appends back into main — the fast-forward case:

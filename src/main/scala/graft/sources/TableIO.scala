@@ -46,21 +46,6 @@ object TableIO {
 
   def readParquet(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
 
-  /** Read an explicit list of engine-written parquet FILES with the
-    * schema taken from the first (lexicographically) file's footer on
-    * the DRIVER — `spark.read.parquet(files)` without a schema launches
-    * a schema-inference Spark job per call, a fixed cost the lake
-    * readers (Delta/Iceberg/Hudi live-file scans, CDC windows, snapshot
-    * pruned scans) paid on every consumer. Callers pass uniform-schema
-    * file sets (single-commit writes), where inference with mergeSchema
-    * off reads the same single footer anyway. `_metadata` provenance
-    * columns are unaffected by an explicit schema. */
-  def readFilesFooter(spark: SparkSession, files: Seq[String]): DataFrame = {
-    require(files.nonEmpty, "readFilesFooter needs at least one file")
-    spark.read.schema(org.apache.spark.sql.graftbridge.Bridge
-      .parquetFooterSchema(spark, files.min)).parquet(files: _*)
-  }
-
   /** Atomic table replace (CTAS semantics, A1). */
   def replaceTable(df: DataFrame, table: String): Unit =
     df.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
@@ -266,11 +251,7 @@ object TableIO {
     // cheap side of the trade at any scale.
     val n = fs.listStatus(target)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, hconf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+      .map(s => ParquetScan.rowCount(spark, s.getPath.toString)).sum
     val files = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt
     spark.read.parquet(path)
       .repartition(files).write.mode(SaveMode.Overwrite).parquet(tmp)
@@ -435,10 +416,7 @@ object TableIO {
       val dst = new org.apache.hadoop.fs.Path(s"$dir/$name")
       if (name.contains("/")) fs.mkdirs(dst.getParent)
       require(fs.rename(parts.head, dst), s"rename ${parts.head} -> $dst failed")
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dst, hconf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val rows = try r.getRecordCount finally r.close()
-      (name, rows)
+      (name, ParquetScan.rowCount(spark, dst.toString))
     }
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     out

@@ -31,12 +31,11 @@ object EventStreams {
     * scan), and the ts column is then normalized by the SAME
     * schema-adaptive rule as the batch path
     * ([[graft.queries.Tables.normalizeTsExpr]]) — batch and stream cannot
-    * disagree on what an instant means. Footer read is driver-side
-    * (Bridge.parquetFooterSchema): `spark.read.parquet(f).schema` runs a
+    * disagree on what an instant means. The footer read is the shared
+    * scan path's, on the driver: `spark.read.parquet(f).schema` runs a
     * tiny Spark job per call, paid at every stream-gate query start. */
   def rawSchema(spark: SparkSession, sfDir: String): StructType =
-    org.apache.spark.sql.graftbridge.Bridge
-      .parquetFooterSchema(spark, s"$sfDir/events.parquet")
+    graft.sources.ParquetScan.readSchema(spark, Seq(s"$sfDir/events.parquet"))
 
   /** Streaming source over the events parquet (file-stream; the source
     * needs a directory, so glob-filter the events file out of the sf

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.{DeltaCompat, HudiCompat, IcebergCompat}
+import graft.sources.{DeltaCompat, HudiCompat, IcebergCompat, ParquetScan}
 
 /** FOREIGN-LAKE STREAMING SOURCE — the streaming twin of the batch
   * incremental pulls ([[graft.sources.DeltaCompat.addedBetween]] /
@@ -50,12 +50,13 @@ import graft.sources.{DeltaCompat, HudiCompat, IcebergCompat}
 object ForeignLakeStream {
 
   /** One lake format's offset ladder. `latest` = current head offset;
-    * `added` = data files entering in `(from, to]`; `filesAt` = the
-    * full live file set at `to` (schema inference). */
+    * `added` = data files entering in `(from, to]`; `schemaAt` = the
+    * read schema of the table at `to` (declared, else the shared footer
+    * rule over its live files — [[graft.sources.ParquetScan]]). */
   private[streaming] sealed trait Lake extends Serializable {
     def latest(spark: SparkSession, path: String): Long
     def added(spark: SparkSession, path: String, from: Long, to: Long): Seq[String]
-    def filesAt(spark: SparkSession, path: String, to: Long): Seq[String]
+    def schemaAt(spark: SparkSession, path: String, to: Long): StructType
   }
 
   private[streaming] case object DeltaLake extends Lake {
@@ -63,8 +64,8 @@ object ForeignLakeStream {
       DeltaCompat.latestVersion(spark, path)
     def added(spark: SparkSession, path: String, from: Long, to: Long): Seq[String] =
       DeltaCompat.addedBetween(spark, path, from, to)
-    def filesAt(spark: SparkSession, path: String, to: Long): Seq[String] =
-      DeltaCompat.liveFiles(spark, path, Some(to))
+    def schemaAt(spark: SparkSession, path: String, to: Long): StructType =
+      DeltaCompat.dataSchema(spark, path, Some(to))
   }
 
   private[streaming] case object HudiLake extends Lake {
@@ -87,8 +88,9 @@ object ForeignLakeStream {
         inst > from
       }
     }
-    def filesAt(spark: SparkSession, path: String, to: Long): Seq[String] =
-      HudiCompat.liveFiles(spark, path, Some(instantAt(spark, path, to)))
+    def schemaAt(spark: SparkSession, path: String, to: Long): StructType =
+      ParquetScan.readSchema(spark,
+        HudiCompat.liveFiles(spark, path, Some(instantAt(spark, path, to))))
   }
 
   private[streaming] case object IcebergLake extends Lake {
@@ -106,11 +108,13 @@ object ForeignLakeStream {
         ids((from - 1).toInt), ids((to - 1).toInt))
         .map(p => resolveIceberg(path, p))
     }
-    def filesAt(spark: SparkSession, path: String, to: Long): Seq[String] = {
+    def schemaAt(spark: SparkSession, path: String, to: Long): StructType = {
       val ids = IcebergCompat.snapshotIds(spark, path)
       require(to >= 1 && to <= ids.size, s"snapshot index $to out of range at $path")
-      IcebergCompat.resolveSnapshot(spark, path, Some(ids((to - 1).toInt)))
-        .filter(_.content == 0).map(p => resolveIceberg(path, p.path)).sorted
+      val files = IcebergCompat.resolveSnapshot(spark, path, Some(ids((to - 1).toInt)))
+        .filter(_.content == 0).map(p => resolveIceberg(path, p.path))
+      require(files.nonEmpty, s"foreign table at $path has no live files")
+      ParquetScan.readSchema(spark, files, IcebergCompat.declaredSchema(spark, path))
     }
     private def resolveIceberg(dir: String, p: String): String =
       if (p.startsWith("/") || p.contains(":/")) p else s"$dir/$p"
@@ -162,12 +166,8 @@ class ForeignLakeStreamProvider extends TableProvider with DataSourceRegister {
           "restores them")
     val head = lake.latest(spark, path)
     require(head >= 0, s"foreign table at $path has no commits to infer a schema from")
-    val files = lake.filesAt(spark, path, head)
-    require(files.nonEmpty, s"foreign table at $path has no live files")
-    // driver-side footer read: spark.read.parquet(f).schema launches a
-    // tiny job, and inferSchema runs at every stream query start
-    val schema = org.apache.spark.sql.graftbridge.Bridge
-      .parquetFooterSchema(spark, files.head)
+    // driver-side (no Spark job): inferSchema runs at every stream start
+    val schema = lake.schemaAt(spark, path, head)
     ForeignLakeStream.requireFlat(schema)
     if (mode == "cdf")
       StructType(schema.fields.toSeq :+
@@ -298,9 +298,12 @@ class GroupParquetPartitionReader(file: String, schemaJson: String,
       val f = schema.fields(i)
       if (constants.contains(f.name)) { vals(i) = constants(f.name); i += 1 }
       else {
-      val idx = current.getType.getFieldIndex(f.name)
+      // a column the table gained after this file was written is NULL
+      val idx =
+        if (current.getType.containsField(f.name)) current.getType.getFieldIndex(f.name)
+        else -1
       vals(i) =
-        if (current.getFieldRepetitionCount(idx) == 0) null
+        if (idx < 0 || current.getFieldRepetitionCount(idx) == 0) null
         else f.dataType match {
           case LongType => current.getLong(idx, 0)
           case IntegerType => current.getInteger(idx, 0)

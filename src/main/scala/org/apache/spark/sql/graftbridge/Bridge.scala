@@ -56,6 +56,20 @@ object Bridge {
     finally r.close()
   }
 
+  /** Parquet's `mergeSchema` union of two file schemas
+    * (`StructType.merge` is `private[sql]`): fields matched by name,
+    * first-seen order kept, new fields appended, incompatible types
+    * refused — the same merge Spark's schema-inference job runs. */
+  def mergeSchemas(a: org.apache.spark.sql.types.StructType,
+      b: org.apache.spark.sql.types.StructType,
+      caseSensitive: Boolean): org.apache.spark.sql.types.StructType =
+    a.merge(b, caseSensitive)
+
+  /** Every field nullable, recursively (`StructType.asNullable` is
+    * `private[spark]`) — the nullability a file relation reports. */
+  def asNullable(st: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = st.asNullable
+
   /** DataFrame over a custom LogicalPlan (`Dataset.ofRows` went
     * `private[sql]` with the Connect split) — the entry point custom
     * logical operators need. */

@@ -149,6 +149,45 @@ class ApiSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("served source reads launch no Spark job (driver-side footer rule)") {
+    val src = tmp("src")
+    writeSurvey(src)
+    // job starts by job group, observed through a SparkListener; a fence
+    // job in its own group flushes the (asynchronous, ordered) listener
+    // queue before anything is counted
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def jobsIn(group: String)(body: => Unit): Int = {
+      val sc = spark.sparkContext
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      val fence = s"$group-fence"
+      sc.setJobGroup(fence, fence)
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!started.contains(fence) && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(started.contains(fence), "listener never saw the fence job")
+      started.toArray.count(_ == group)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // the mechanism is live: Spark's own reader infers the schema in a job
+      assert(jobsIn("inferring-read")(spark.read.parquet(src).schema) >= 1)
+      // every endpoint's source read: schema and analyzed plan, no job
+      assert(jobsIn("served-read") {
+        val df = graft.sources.ParquetScan.readPath(spark, src)
+        assert(df.schema.fieldNames.toSeq == Seq("Connect_ID", "d_111111111",
+          "d_578895128_d_578895128", "state_d_987654321", "token"))
+        df.queryExecution.analyzed
+      } == 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("approx-distinct profiling matches exact classification here") {
     val src = tmp("src")
     writeSurvey(src)

@@ -77,36 +77,33 @@ class MaterializeSpec extends SparkSpec {
     // single JVM: executor loss == driver loss, so the reliable
     // checkpoint's write+read-back per round buys nothing — the default
     // must be the cheaper localCheckpoint (round-16 A/B)
-    // mtime-based: the ContextCleaner may DELETE old checkpoint files
-    // concurrently (cleanCheckpoints=true), so a before/after COUNT is
-    // flaky — what local mode must guarantee is that no NEW file lands
-    def newCheckpointFiles(since: Long): Int =
-      spark.sparkContext.getCheckpointDir.map { d =>
-        val p = java.nio.file.Paths.get(new java.net.URI(d).getPath)
-        if (!java.nio.file.Files.exists(p)) 0
-        else {
-          val s = java.nio.file.Files.walk(p)
-          try s.filter(f => java.nio.file.Files.isRegularFile(f) &&
-              java.nio.file.Files.getLastModifiedTime(f).toMillis >= since)
-            .count().toInt
-          finally s.close()
-        }
-      }.getOrElse(0)
-    // fence off files the PRECEDING reliable-mode tests just wrote:
-    // wait out filesystem mtime granularity, then stamp t0 with a small
-    // margin — only files born during THIS call should count
-    Thread.sleep(1100)
-    val t0 = System.currentTimeMillis() - 50
     val out = Materialize.carried(
       spark.range(10).select(col("id"), (col("id") * 3).as("v")))
-    // lineage truncated to a leaf (the localCheckpoint contract carried
-    // shares with the reliable mode) …
-    assert(out.queryExecution.analyzed.children.isEmpty,
-      s"expected a truncated leaf plan, got ${out.queryExecution.analyzed}")
+    // lineage truncated to a leaf over the checkpointed RDD (the contract
+    // carried shares with the reliable mode) …
+    val rdd = out.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      case other => fail(s"expected a truncated LogicalRDD leaf, got $other")
+    }
     assert(out.count() == 10)
-    // … and nothing new landed in the reliable checkpoint directory
-    assert(newCheckpointFiles(t0) == 0,
-      "default local mode must not write reliable-checkpoint files")
+    // … checkpointed LOCALLY: materialized eagerly, no reliable checkpoint
+    // file behind it, lineage rooted in the block-manager-backed
+    // LocalCheckpointRDD
+    assert(rdd.isCheckpointed, "carried must checkpoint eagerly")
+    assert(rdd.getCheckpointFile.isEmpty,
+      "default local mode must not write a reliable checkpoint file")
+    assert(rdd.dependencies.map(_.rdd.getClass.getSimpleName) ==
+      Seq("LocalCheckpointRDD"), s"not a local checkpoint: ${rdd.toDebugString}")
+  }
+
+  test("carried rejects an unknown spark.graft.loop.materialize value") {
+    withMode("localcheckpoint") {
+      val e = intercept[IllegalArgumentException] {
+        Materialize.carried(spark.range(10).toDF())
+      }
+      assert(e.getMessage.contains("spark.graft.loop.materialize") &&
+        e.getMessage.contains("localcheckpoint"), e.getMessage)
+    }
   }
 
   test("invariant is a DISK_ONLY persist (no executor-memory pinning)") {
